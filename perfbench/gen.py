@@ -1,8 +1,8 @@
 """Seeded inputs for the benchmark.
 
 Everything a workload feeds the program comes from here and depends
-only on ``--seed``: the testdata tables the read workloads query, the
-explore query stream, and the OTLP request files of the ingest ticks.
+only on ``--seed``: the testdata tables the dashboard queries and the
+OTLP request files of the ingest ticks.
 The program under test never sees the seed, only what is generated.
 """
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""oteldb_spark benchmark: one command, three workloads.
+"""oteldb_spark benchmark: one command, two workloads.
 
-    python3 perfbench/run.py --workload {dashboard,explore,ingest} \
+    python3 perfbench/run.py --workload {dashboard,ingest} \
         --seed N --seconds S --trace {0,1}
 
 Run from the repository root.  The command builds its inputs from
@@ -56,14 +56,10 @@ PER_LAYER = [
     ("jobs_per_query", "count"),
     ("stages_per_query", "count"),
     ("tasks_per_query", "count"),
-    ("cache_hit_ratio", "1"),
-    ("cache_bytes", "B"),
     ("store_files", "count"),
     ("driver_cpu_s", "s"),
     ("jvm_cpu_s", "s"),
-    ("pyworker_cpu_s", "s"),
     ("gc_ms", "ms"),
-    ("host_steal_pct", "%"),
     ("traced_query_p50_ms", "ms"),
 ]
 # per-layer metrics that only the traced client measures
@@ -141,7 +137,7 @@ def _report(name: str, value, unit: str, note: str = "") -> None:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True, choices=["dashboard", "explore", "ingest"])
+    ap.add_argument("--workload", required=True, choices=["dashboard", "ingest"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -198,8 +194,6 @@ def _run(args, work: str, t_proc: float) -> int:
         ctx = wl.Ctx(spark, tracer, work, data_dir, args.seed, traced)
         if args.workload == "dashboard":
             workload = wl.Dashboard(ctx)
-        elif args.workload == "explore":
-            workload = wl.Explore(ctx)
         else:
             workload = wl.Ingest(ticks)
         tracer.enabled = False  # spans only for the timed phase
@@ -210,30 +204,18 @@ def _run(args, work: str, t_proc: float) -> int:
         cpu0 = probes.tree_cpu()
         steal0 = probes.host_cpu_times()
         gc0 = probes.jvm_gc_ms(spark)
-        stats = workload.cache_stats()
-        hits0 = stats.hits + stats.partial_hits if stats else 0
-        misses0 = stats.misses if stats else 0
-        # closed loop of whole operation groups; another group starts
-        # only if one as long as the last still ends by the deadline,
-        # so the group count tracks the program's speed, not the noise
-        # around the deadline
-        t_start = t_prev = time.perf_counter()
-        while workload.step(ctx):
-            now = time.perf_counter()
-            if now - t_start + (now - t_prev) > args.seconds:
-                break
-            t_prev = now
+        # closed loop of whole operation groups, started while the
+        # timed phase is shorter than --seconds
+        t_start = time.perf_counter()
+        while workload.step(ctx) and time.perf_counter() - t_start < args.seconds:
+            pass
         wall = time.perf_counter() - t_start
         cpu = probes.tree_cpu() - cpu0
         steal = probes.steal_pct(steal0, probes.host_cpu_times())
         gc_ms = probes.jvm_gc_ms(spark) - gc0
-        hits = stats.hits + stats.partial_hits - hits0 if stats else 0
-        lookups = hits + (stats.misses - misses0 if stats else 0)
         peak = probes.peak_rss_mb()
-        store_bytes, store_files = wl.dir_stats(*workload.store_paths(ctx))
-        cache_bytes = (
-            wl.dir_stats(os.path.join(ctx.work, "cache"))[0] if stats else 0
-        )
+        store_files = wl.dir_stats(*workload.store_paths(ctx))[1]
+        extra = workload.extra_metrics(ctx, cpu.total)
 
         workload.check(ctx)
     except Exception:  # noqa: BLE001 — report, print no result
@@ -275,14 +257,10 @@ def _run(args, work: str, t_proc: float) -> int:
         "jobs_per_query": mean("jobs"),
         "stages_per_query": mean("stages"),
         "tasks_per_query": mean("tasks"),
-        "cache_hit_ratio": hits / lookups if lookups else 0.0,
-        "cache_bytes": float(cache_bytes),
         "store_files": float(store_files),
         "driver_cpu_s": cpu.driver,
         "jvm_cpu_s": cpu.jvm,
-        "pyworker_cpu_s": cpu.pyworker,
         "gc_ms": gc_ms,
-        "host_steal_pct": steal,
         "traced_query_p50_ms": p50,
     }
 
@@ -308,8 +286,11 @@ def _run(args, work: str, t_proc: float) -> int:
     _report("ops_per_s", e2e["ops_per_s"], "1/s", f"(op = {op})")
     _report("cpu_ms_per_op", e2e["cpu_ms_per_op"], "ms", f"(op = {op})")
     _report("peak_rss_mb", peak, "MB")
-    for name, value, unit, note in workload.extra_metrics(cpu.total, store_bytes):
+    for name, value, unit, note in extra:
         _report(name, value, unit, note)
+    # figures of one workload only, or of the host: printed, not compared
+    _report("pyworker_cpu_s", cpu.pyworker, "s")
+    _report("host_steal_pct", steal, "%", "(environment, not compared)")
     attempted = ctx.ops + ctx.checks
     failed = ctx.failed + ctx.check_failed
     _report("fail_ratio", failed / attempted if attempted else 1.0, "1",

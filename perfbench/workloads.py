@@ -1,4 +1,4 @@
-"""The three workloads and the closed-loop client that drives them.
+"""The two workloads and the closed-loop client that drives them.
 
 Every workload talks to the program only through its public surface:
 the facades of ``oteldb_spark.engine``, the shared
@@ -8,7 +8,8 @@ the next operation only after the previous one returned.
 
 A workload has three phases: ``setup`` (sources, facades, warm-up),
 ``step`` (one timed closed-loop operation group) and ``check``
-(untimed correctness).
+(untimed correctness); ``extra_metrics`` gives the figures of the
+layers only it drives, and ``teardown`` stops what it started.
 """
 
 from __future__ import annotations
@@ -24,22 +25,20 @@ from dataclasses import dataclass, field
 
 import gen
 
-# the read workloads' dashboard clock and query windows live inside
-# the 30 generated event days
+# PromQL lookback (staleness window) of the dashboard's metric facade
 LOOKBACK_US = gen.HOUR_US
 
 
 @dataclass(frozen=True)
 class Query:
-    kind: str  # panel or template name
-    lang: str  # logql | promql | traceql | traceql_metrics
+    kind: str  # panel name, or read_after_write on ingest
+    lang: str  # logql | promql | traceql
     q: str
     start_us: int = 0
     end_us: int = 0
     step_us: int = 0
     limit: int | None = None
     now_us: int | None = None
-    window_us: int = 0  # longest range window inside q (referee slicing)
 
 
 @dataclass
@@ -128,9 +127,7 @@ def facade_call(f: Facades, q: Query) -> dict:
         return f.promql.query_range(
             q.q, q.start_us, q.end_us, q.step_us, now_us=q.now_us
         )
-    if q.lang == "traceql":
-        return f.traceql.search(q.q, limit=q.limit)
-    return f.traceql.query_range(q.q, q.start_us, q.end_us, q.step_us)
+    return f.traceql.search(q.q, limit=q.limit)
 
 
 def _parse(q: Query):
@@ -145,7 +142,7 @@ def _parse(q: Query):
 
 def _frame(f: Facades, q: Query):
     """The frame step of the facade call (``query_range_frame`` /
-    ``search_frame`` / the TraceQL metrics compile)."""
+    ``search_frame``)."""
     if q.lang == "logql":
         return f.logql.query_range_frame(
             q.q, q.start_us, q.end_us, q.step_us, limit=q.limit, now_us=q.now_us
@@ -154,18 +151,7 @@ def _frame(f: Facades, q: Query):
         return f.promql.query_range_frame(
             q.q, q.start_us, q.end_us, q.step_us, now_us=q.now_us
         )
-    if q.lang == "traceql":
-        return f.traceql.search_frame(q.q, q.limit)
-    from oteldb_spark.traceql.compiler import compile_traceql_metrics
-
-    return compile_traceql_metrics(
-        q.q,
-        f.span_source,
-        start_us=q.start_us,
-        end_us=q.end_us,
-        step_us=q.step_us,
-        range_us=q.step_us,
-    )
+    return f.traceql.search_frame(q.q, q.limit)
 
 
 def _serialize(f: Facades, q: Query, df, parsed) -> dict:
@@ -183,11 +169,8 @@ def _serialize(f: Facades, q: Query, df, parsed) -> dict:
             return ser.loki_streams(df, labels, max_rows=f.logql.max_result_rows)
         labels = [c for c in df.columns if c not in ("step_us", "value")]
         return ser.loki_matrix(df, labels, max_rows=f.logql.max_result_rows)
-    max_rows = (
-        f.promql.max_result_rows if q.lang == "promql" else ser.DEFAULT_MAX_RESULT_ROWS
-    )
     labels = [c for c in df.columns if c not in ("step_us", "value")]
-    return ser.prom_matrix(df, labels, max_rows=max_rows)
+    return ser.prom_matrix(df, labels, max_rows=f.promql.max_result_rows)
 
 
 def concurrently(f: Facades, queries: list[Query]) -> list[dict]:
@@ -360,12 +343,10 @@ class Dashboard:
         if ctx.traced:
             _install_cache_tracing(self.f, ctx.tracer)
         # warm-up: one refresh fills the cache for every cached panel
-        # (concurrently, which shortens the cold JVM phase), a second
-        # takes the partial-hit path once, so the timed refreshes do
-        # not share the CPU with the JIT compiling that path
+        # (concurrently, which shortens the cold JVM phase)
         concurrently(self.f, self._refresh_queries())
-        for q in self._refresh_queries():
-            facade_call(self.f, q)
+        st = self.f.cache.stats
+        self.stats0 = (st.hits + st.partial_hits, st.misses)
 
     def _refresh_queries(self) -> list[Query]:
         now = self.now0 + self.refresh_no * DASH_STEP_US
@@ -396,245 +377,25 @@ class Dashboard:
                 ctx.check_failed += 1
                 ctx.fail(f"cache vs recompute {q.kind}", d)
 
-    def cache_stats(self):
-        return self.f.cache.stats
-
     def store_paths(self, ctx: Ctx) -> list[str]:
         return [ctx.data_dir, os.path.join(ctx.work, "cache")]
 
     def teardown(self, ctx: Ctx) -> None:
         pass
 
-    def extra_metrics(self, cpu_s: float, store_bytes: int) -> list:
-        return []
-
-
-# ---------------------------------------------------------------------------
-# explore
-# ---------------------------------------------------------------------------
-
-EXPLORE_POINTS = 24
-RANGES_US = [gen.HOUR_US * h for h in (1, 3, 6, 12, 24, 72, 168, 336, 720)]
-SERVICES = [f"svc-{i}" for i in range(8)]
-LEVELS = ["ERROR", "INFO", "DEBUG"]
-MTYPES = gen.EVENT_TYPES
-
-
-def _dur(us: int) -> str:
-    if us % gen.HOUR_US == 0:
-        return f"{us // gen.HOUR_US}h"
-    return f"{us // gen.MIN_US}m"
-
-
-class QueryGenerator:
-    """Seeded ad-hoc queries.  One rotation issues one query per
-    template, in a fixed order, so every run covers the same operators;
-    the seed draws matchers, filters, windows, ranges (1h-30d), steps,
-    groupings, aggregations and ``*_over_time`` functions.  No two
-    queries share a result-cache entry (query text, step, grid
-    alignment)."""
-
-    TEMPLATES = [
-        "logql_count", "logql_json_rate", "logql_listing", "promql_rate",
-        "promql_over_time", "traceql_search", "traceql_child",
-        "traceql_descendant", "traceql_metrics",
-    ]
-
-    def __init__(self, seed: int) -> None:
-        self.rng = random.Random(f"explore-{seed}")
-        self.n = 0
-        self.seen: set = set()
-
-    def _range(self) -> tuple[int, int, int]:
-        r = self.rng
-        span = r.choice(RANGES_US)
-        # a fixed point count keeps the step fan-out, and so the cost,
-        # comparable across seeds; the step follows the range
-        step = max(gen.MIN_US, span // EXPLORE_POINTS // gen.MIN_US * gen.MIN_US)
-        end_hi = gen.EPOCH_US + gen.EVENT_DAYS * gen.DAY_US
-        end = r.randrange(gen.EPOCH_US + span, end_hi + 1, gen.MIN_US)
-        return end - span, end, step
-
-    def _selector(self) -> str:
-        r = self.rng
-        ms = []
-        if r.random() < 0.7:
-            ms.append(f'env="{r.choice(["prod", "staging"])}"')
-        if r.random() < 0.5 or not ms:
-            pick = r.sample(SERVICES, r.randint(1, 3))
-            ms.append(f'service=~"{"|".join(pick)}"')
-        if r.random() < 0.3:
-            ms.append(f'level!="{r.choice(LEVELS)}"')
-        return "{" + ", ".join(ms) + "}"
-
-    def _window(self, step: int) -> int:
-        return self.rng.choice([w for w in (step, 2 * step, 4 * step) if w >= gen.MIN_US])
-
-    def _make(self, kind: str) -> Query:
-        r = self.rng
-        start, end, step = self._range()
-        if kind == "logql_count":
-            w = self._window(step)
-            g = r.choice(["level", "service", "env", "service, level"])
-            filt = f' |= `"k": {r.randrange(10)}`'
-            text = f"sum by ({g}) (count_over_time({self._selector()}{filt} [{_dur(w)}]))"
-            return Query(kind, "logql", text, start, end, step, window_us=w)
-        if kind == "logql_json_rate":
-            w = self._window(step)
-            g = r.choice(["level", "service"])
-            op = r.choice([">", "<", ">="])
-            text = (
-                f"sum by ({g}) (rate({self._selector()} | json | "
-                f"k {op} {r.randrange(100)} [{_dur(w)}]))"
-            )
-            return Query(kind, "logql", text, start, end, step, window_us=w)
-        if kind == "logql_listing":
-            text = f'{self._selector()} |= `"k": {r.randrange(100)}`'
-            return Query(kind, "logql", text, start, end, step, limit=100)
-        if kind == "promql_rate":
-            w = max(self._window(step), gen.HOUR_US)
-            g = r.choice(["mtype", "instance"])
-            m = r.choice(["", f'{{mtype!="{r.choice(MTYPES)}"}}',
-                          f'{{instance=~"host-[{r.randrange(5)}-9]"}}'])
-            text = f"sum by ({g}) (rate(events_value_total{m}[{_dur(w)}]))"
-            return Query(kind, "promql", text, start, end, step, window_us=w)
-        if kind == "promql_over_time":
-            w = max(self._window(step), gen.HOUR_US)
-            agg = r.choice(["max", "avg", "min"])
-            fn = r.choice(["avg_over_time", "max_over_time", "min_over_time"])
-            g = r.choice(["mtype", "instance"])
-            text = f"{agg} by ({g}) ({fn}(events_gauge[{_dur(w)}]))"
-            return Query(kind, "promql", text, start, end, step, window_us=w)
-        if kind == "traceql_search":
-            cond = r.choice([
-                "status = error",
-                f'span.service = "svc-{r.randrange(4)}"',
-                f"duration > {r.randrange(10, 90)}ms",
-                f'name = "line-{r.choice("ANR")}"',
-            ])
-            text = f"{{ {cond} }} | count() > {r.randrange(2, 6)}"
-            return Query(kind, "traceql", text, limit=20)
-        if kind in ("traceql_child", "traceql_descendant"):
-            op = ">" if kind == "traceql_child" else ">>"
-            pri = r.choice(gen.PRIORITIES)
-            rhs = r.choice(["status = error", f'span.service = "svc-{r.randrange(4)}"'])
-            text = f'{{ name = "order-{pri}" }} {op} {{ {rhs} }}'
-            return Query(kind, "traceql", text, limit=20)
-        # traceql_metrics: spans cover 1995-2001; weekly steps over it
-        day0 = 788_918_400_000_000  # 1995-01-01
-        weeks = r.choice((8, 12, 26))
-        t0 = day0 + r.randrange(0, 300) * 7 * gen.DAY_US
-        cond = r.choice(["status = error", "kind = server", "duration > 50ms", ""])
-        text = f"{{ {cond} }} | rate() by (span.service)"
-        step_w = 7 * gen.DAY_US
-        return Query(kind, "traceql_metrics", text, t0, t0 + weeks * step_w, step_w)
-
-    def next(self) -> Query:
-        kind = self.TEMPLATES[self.n % len(self.TEMPLATES)]
-        self.n += 1
-        for _ in range(1000):
-            q = self._make(kind)
-            key = (q.lang, q.q, q.step_us, q.start_us % q.step_us if q.step_us else q.start_us,
-                   q.limit)
-            if key not in self.seen:
-                self.seen.add(key)
-                return q
-        raise RuntimeError(f"query space of {kind} exhausted")
-
-
-REFEREE_KINDS = ("logql_count", "logql_json_rate", "promql_rate", "promql_over_time")
-
-
-class Explore:
-    """Every query distinct: the shared cache always misses and fills."""
-
-    def __init__(self, ctx: Ctx) -> None:
-        self.gen = QueryGenerator(ctx.seed)
-        self.answers: list[tuple[Query, dict | None]] = []
-
-    def setup(self, ctx: Ctx) -> None:
-        self.f = Facades(ctx.spark, ctx.data_dir, os.path.join(ctx.work, "cache"))
-        if ctx.traced:
-            _install_cache_tracing(self.f, ctx.tracer)
-        # warm-up: one rotation (its queries are never reused later)
-        concurrently(self.f, [self.gen.next() for _ in QueryGenerator.TEMPLATES])
-
-    def step(self, ctx: Ctx) -> bool:
-        """One rotation: a fresh query of every template."""
-        for _ in QueryGenerator.TEMPLATES:
-            q = self.gen.next()
-            self.answers.append((q, client_query(ctx, self.f, q)))
-        return True
-
-    def check(self, ctx: Ctx) -> None:
-        """The first timed query of each referee-checkable template
-        agrees with the independent referees at its first and last
-        grid step."""
-        from oteldb_spark.logql_referee import (
-            LogQLReferee,
-            build_logql_referee,
-            engine_logql_to_points,
-            referee_logql_to_points,
-        )
-        from oteldb_spark.referee import (
-            build_referee,
-            diff_points,
-            engine_to_points,
-            referee_to_points,
-        )
-
-        picked = {}
-        for q, resp in self.answers:
-            if q.kind in REFEREE_KINDS and q.kind not in picked:
-                picked[q.kind] = (q, resp)
-        log_ref = prom_ref = None
-        for q, resp in picked.values():
-            ctx.checks += 1
-            if resp is None:
-                ctx.check_failed += 1
-                continue
-            grid_hi = q.start_us + (q.end_us - q.start_us) // q.step_us * q.step_us
-            try:
-                if q.lang == "logql":
-                    if log_ref is None:
-                        log_ref = build_logql_referee(ctx.spark, ctx.data_dir)
-                    got = engine_logql_to_points(resp)[1]
-                else:
-                    if prom_ref is None:
-                        prom_ref = build_referee(ctx.spark, ctx.data_dir, LOOKBACK_US)
-                    got = engine_to_points(resp)
-                for t in (q.start_us, grid_hi):
-                    if q.lang == "logql":
-                        rows = [
-                            r for r in log_ref.rows
-                            if t - q.window_us < r.ts_us <= t
-                        ]
-                        want = referee_logql_to_points(
-                            *LogQLReferee(rows).query(q.q, t, t, q.step_us)
-                        )[1]
-                    else:
-                        want = referee_to_points(prom_ref.query_range(q.q, t, t, q.step_us))
-                    at_t = {
-                        sig: {t: pts[t]} for sig, pts in got.items() if t in pts
-                    }
-                    d = diff_points(at_t, want)
-                    if d is not None:
-                        raise AssertionError(f"{q.q} @ {t}: {d}")
-            except Exception:  # noqa: BLE001 — a failed check is counted
-                ctx.check_failed += 1
-                ctx.fail(f"referee {q.kind}", traceback.format_exc())
-
-    def cache_stats(self):
-        return self.f.cache.stats
-
-    def store_paths(self, ctx: Ctx) -> list[str]:
-        return [ctx.data_dir, os.path.join(ctx.work, "cache")]
-
-    def teardown(self, ctx: Ctx) -> None:
-        pass
-
-    def extra_metrics(self, cpu_s: float, store_bytes: int) -> list:
-        return []
+    def extra_metrics(self, ctx: Ctx, cpu_s: float) -> list:
+        """The result-cache figures of the timed refreshes, as (name,
+        value, unit, note): (hits + partial hits) / lookups, and the
+        bytes the cache holds at the end."""
+        st = self.f.cache.stats
+        hits = st.hits + st.partial_hits - self.stats0[0]
+        lookups = hits + st.misses - self.stats0[1]
+        cache_bytes = dir_stats(os.path.join(ctx.work, "cache"))[0]
+        return [
+            ("cache_hit_ratio", hits / lookups if lookups else 0.0, "1",
+             f"lookups={lookups}"),
+            ("cache_bytes", cache_bytes, "B", ""),
+        ]
 
 
 # ---------------------------------------------------------------------------
@@ -732,12 +493,23 @@ class Ingest:
         for _ in range(WARM_TICKS):
             self._tick(ctx, warm=True)
 
-    def _land(self, in_dir: str, tick_no: int, payloads: list[bytes]) -> None:
-        for i, body in enumerate(payloads):
-            tmp = os.path.join(in_dir, f".t{tick_no:05d}_{i:03d}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(body)
-            os.rename(tmp, os.path.join(in_dir, f"t{tick_no:05d}_{i:03d}.binpb"))
+    def _land(self, t: gen.Tick) -> None:
+        """Write the tick's request files under hidden names, then
+        rename them all: a stream that listed its input directory
+        while the files were still being written would split the tick
+        into two micro-batches, and the metric stream's sink (the
+        registry MERGE) would run twice."""
+        staged = []
+        for in_dir, payloads in ((self.dirs["in_logs"], t.log_payloads),
+                                 (self.dirs["in_metrics"], t.metric_payloads)):
+            for i, body in enumerate(payloads):
+                name = f"t{t.no:05d}_{i:03d}"
+                tmp = os.path.join(in_dir, f".{name}.tmp")
+                with open(tmp, "wb") as fh:
+                    fh.write(body)
+                staged.append((tmp, os.path.join(in_dir, f"{name}.binpb")))
+        for tmp, final in staged:
+            os.rename(tmp, final)
 
     def _log_facade(self, spark):
         from pyspark.sql import functions as F
@@ -780,8 +552,7 @@ class Ingest:
         tr = ctx.tracer
         with tr.span("tick"):
             with tr.span("land_files"):
-                self._land(self.dirs["in_logs"], t.no, t.log_payloads)
-                self._land(self.dirs["in_metrics"], t.no, t.metric_payloads)
+                self._land(t)
             with tr.span("drain") as sp:
                 tr.foreign_parent = sp
                 t0 = time.perf_counter()
@@ -852,8 +623,9 @@ class Ingest:
     def store_paths(self, ctx: Ctx) -> list[str]:
         return [self.dirs["logs"], self.dirs["points"], self.dirs["registry"]]
 
-    def extra_metrics(self, cpu_s: float, store_bytes: int) -> list:
+    def extra_metrics(self, ctx: Ctx, cpu_s: float) -> list:
         """The ingest-side metrics, as (name, value, unit, note)."""
+        store_bytes = dir_stats(*self.store_paths(ctx))[0]
         records = self.records_stored
         all_records = sum(t.n_log_records + t.n_points for t in self.ticks[: self.next_tick])
         prog = self.progress
@@ -872,9 +644,6 @@ class Ingest:
             ("registry_merge_ms", median(self.merge_ms), "ms", f"n={len(self.merge_ms)}"),
             ("store_append_ms", median(self.append_ms), "ms", f"n={len(self.append_ms)}"),
         ]
-
-    def cache_stats(self):
-        return None
 
     def teardown(self, ctx: Ctx) -> None:
         for q in (getattr(self, "log_q", None), getattr(self, "metric_q", None)):
