@@ -31,6 +31,12 @@ from pyspark.sql import DataFrame
 _LIVE_PINS: list["weakref.ref[DataFrame]"] = []
 
 
+def pin_mode() -> str:
+    """``SPARK_GRAFT_PIN``: ``disk`` (the default), ``local``, or a
+    reliable-checkpoint directory."""
+    return os.environ.get("SPARK_GRAFT_PIN", "disk")
+
+
 def release_pins(sweep_dead: bool = True) -> int:
     """Unpersist every pin issued since the last release; returns the
     number released.  No-op for localCheckpoint / reliable-checkpoint
@@ -92,7 +98,7 @@ def repin(df: DataFrame, *, small: bool = False) -> DataFrame:
     storage level has been cleared.  Callers that memoize pinned
     frames across queries MUST route the memo hit through this, or a
     release leaves them silently recomputing the subtree per branch."""
-    if os.environ.get("SPARK_GRAFT_PIN", "disk") != "disk":
+    if pin_mode() != "disk":
         return df  # checkpoint modes don't live in the block cache
     lvl = df.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
@@ -112,7 +118,7 @@ def pin(df: DataFrame, *, small: bool = False) -> DataFrame:
     more than the few MB of executor memory they occupy.  Data-sized
     pins stay DISK_ONLY — at 100 TB an in-memory pin of a shingle or
     signature table would evict the working set."""
-    mode = os.environ.get("SPARK_GRAFT_PIN", "disk")
+    mode = pin_mode()
     if mode == "local":
         return df.localCheckpoint(eager=False)
     if mode == "disk":

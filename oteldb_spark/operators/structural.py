@@ -57,9 +57,9 @@ def _materialize(df: DataFrame) -> DataFrame:
     ``localCheckpoint`` (the local-mode default): ``pin``'s DISK_ONLY
     persist is not a substitute here because the loop requires plan
     truncation, which persist does not provide."""
-    import os
+    from .pin import pin_mode
 
-    mode = os.environ.get("SPARK_GRAFT_PIN", "local")
+    mode = pin_mode()
     if mode in ("local", "disk"):
         return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext

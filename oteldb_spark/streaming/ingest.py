@@ -11,10 +11,12 @@ table.  The layout mirrors the MergeTree design (SURVEY §1.2):
   TTL  ≈  retention job dropping aged partitions
 
 The series registry (AggregatingMergeTree in the reference) is a
-``foreachBatch`` merge: per-batch aggregate, union with the current
-registry, re-aggregate, atomically replace.  On Delta Lake this
-becomes a single MERGE INTO; plain parquet needs the
-union-reaggregate-swap."""
+``foreachBatch`` merge into one plain parquet directory: union the
+batch with the current registry, fold to one row per series, write the
+result beside it and swap the directories by two renames; an upsert
+that finds only the ``.old`` side of an interrupted swap restores it
+first.  On Delta Lake this becomes a single MERGE INTO; plain parquet
+needs the whole-registry rewrite."""
 
 from __future__ import annotations
 
@@ -25,6 +27,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.otlp import OTLP_LOGS_SCHEMA, flatten_otlp_logs
+
+
+def _pb_payloads(spark: SparkSession, input_dir: str) -> DataFrame:
+    """``binaryFile`` stream of the ``*.binpb`` request bodies landed
+    under ``input_dir``, as one ``payload`` column."""
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, length long,"
+            " content binary"
+        )
+        .option("pathGlobFilter", "*.binpb")
+        .option("maxFilesPerTrigger", 64)
+        .load(input_dir)
+        .select(F.col("content").alias("payload"))
+    )
+
+
+def _write_by_date(
+    flat: DataFrame, table_dir: str, checkpoint_dir: str, available_now: bool
+):
+    """Append the stream to a date-partitioned parquet table; with
+    ``available_now`` drain what is there and return the finished
+    query, else return the running one."""
+    writer = (
+        flat.writeStream.format("parquet")
+        .option("path", table_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .partitionBy("date")
+    )
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.start()
 
 
 def stream_logs_from_json(
@@ -40,18 +77,9 @@ def stream_logs_from_json(
         .option("maxFilesPerTrigger", 64)
         .json(input_dir)
     )
-    flat = flatten_otlp_logs(raw)
-    writer = (
-        flat.writeStream.format("parquet")
-        .option("path", table_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("date")
+    return _write_by_date(
+        flatten_otlp_logs(raw), table_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
 
 
 def stream_logs_from_pb(
@@ -69,28 +97,8 @@ def stream_logs_from_pb(
     path — the two encodings converge before the first write."""
     from ..sources.otlp_pb import pb_logs
 
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long,"
-            " content binary"
-        )
-        .option("pathGlobFilter", "*.binpb")
-        .option("maxFilesPerTrigger", 64)
-        .load(input_dir)
-    )
-    flat = pb_logs(raw.select(F.col("content").alias("payload")))
-    writer = (
-        flat.writeStream.format("parquet")
-        .option("path", table_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("date")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    flat = pb_logs(_pb_payloads(spark, input_dir))
+    return _write_by_date(flat, table_dir, checkpoint_dir, available_now)
 
 
 def stream_spans_from_pb(
@@ -107,28 +115,8 @@ def stream_spans_from_pb(
     as the batch path."""
     from ..sources.otlp_pb import pb_spans
 
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long,"
-            " content binary"
-        )
-        .option("pathGlobFilter", "*.binpb")
-        .option("maxFilesPerTrigger", 64)
-        .load(input_dir)
-    )
-    flat = pb_spans(raw.select(F.col("content").alias("payload")))
-    writer = (
-        flat.writeStream.format("parquet")
-        .option("path", table_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("date")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    flat = pb_spans(_pb_payloads(spark, input_dir))
+    return _write_by_date(flat, table_dir, checkpoint_dir, available_now)
 
 
 def stream_points_from_pb(
@@ -143,33 +131,11 @@ def stream_points_from_pb(
     histogram/summary explosion, inserter_metrics.go)."""
     from ..sources.otlp_pb import pb_metrics
 
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long,"
-            " content binary"
-        )
-        .option("pathGlobFilter", "*.binpb")
-        .option("maxFilesPerTrigger", 64)
-        .load(input_dir)
-    )
-    flat = pb_metrics(
-        raw.select(F.col("content").alias("payload"))
-    ).withColumn(
+    flat = pb_metrics(_pb_payloads(spark, input_dir)).withColumn(
         "date",
         F.to_date(F.timestamp_micros(F.expr("ts_ns div 1000"))),
     )
-    writer = (
-        flat.writeStream.format("parquet")
-        .option("path", table_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("date")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _write_by_date(flat, table_dir, checkpoint_dir, available_now)
 
 
 def stream_dedup_exact(
@@ -193,62 +159,6 @@ def stream_dedup_exact(
     )
 
 
-def merge_upsert(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_dir: str,
-    key_col: str,
-    reagg,
-    n_buckets: int = 64,
-) -> list[int]:
-    """Partition-pruned MERGE INTO for a plain-parquet table: the
-    table is hash-partitioned on ``pmod(xxhash64(key), n_buckets)``
-    and only the bucket partitions that contain batch keys are read,
-    re-aggregated, and swapped — untouched buckets are never opened.
-
-    ``reagg(df)`` must group by ``key_col`` and return one merged row
-    per key.  Returns the list of rewritten bucket ids.
-
-    At registry scale (billions of series, small per-batch key sets)
-    this turns the whole-table rewrite into O(touched buckets) I/O —
-    the same pruning a Delta/Iceberg MERGE gets from file-level stats.
-    Per-bucket directory swaps are not atomic as a set, which is fine
-    under the single-writer foreachBatch contract."""
-    bucket = F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
-    # two actions below (touched-bucket collect, merged write): persist
-    # so an un-persisted upstream batch is not recomputed per action
-    # (measured by accumulator: 2 of the 3 per-batch decode re-runs in
-    # the e2e ingest sink came from exactly these two actions)
-    b = batch.withColumn("__bucket", bucket).persist()
-    try:
-        touched = sorted(
-            r["__bucket"] for r in b.select("__bucket").distinct().collect()
-        )
-        merged = b
-        if os.path.isdir(table_dir) and any(
-            e.startswith("__bucket=") for e in os.listdir(table_dir)
-        ):
-            existing = spark.read.parquet(table_dir).filter(
-                F.col("__bucket").isin([int(t) for t in touched])
-            )
-            merged = b.unionByName(existing)
-        out = reagg(merged.drop("__bucket")).withColumn("__bucket", bucket)
-        tmp = table_dir.rstrip("/") + ".tmp"
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-    finally:
-        b.unpersist(blocking=False)
-    os.makedirs(table_dir, exist_ok=True)
-    for k in touched:
-        src = os.path.join(tmp, f"__bucket={k}")
-        dst = os.path.join(table_dir, f"__bucket={k}")
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        if os.path.isdir(src):
-            os.rename(src, dst)
-    shutil.rmtree(tmp)
-    return touched
-
-
 def upsert_series_registry(
     spark: SparkSession, batch: DataFrame, registry_dir: str
 ) -> None:
@@ -256,24 +166,40 @@ def upsert_series_registry(
     registry: min(first_seen), max(last_seen), any(name/labels).
 
     The reference's AggregatingMergeTree folds these continuously at
-    insert; here each batch goes through ``merge_upsert`` so only the
-    hash buckets the batch touches are rewritten."""
-    agg = batch.groupBy("series_hash").agg(
-        F.min("ts_ns").alias("first_seen_ns"),
-        F.max("ts_ns").alias("last_seen_ns"),
+    insert; here the batch is unioned with the current registry, folded
+    to one row per series, written to ``<registry>.tmp`` and swapped
+    in: ``<registry>`` → ``<registry>.old``, ``.tmp`` → ``<registry>``,
+    then ``.old`` is removed.  The fold is idempotent, so a replayed
+    micro-batch leaves the rows unchanged.  Single writer, as under
+    foreachBatch."""
+    registry_dir = registry_dir.rstrip("/")
+    tmp, old = registry_dir + ".tmp", registry_dir + ".old"
+    if os.path.isdir(old):
+        if os.path.isdir(registry_dir):
+            shutil.rmtree(old)  # the swap finished, its cleanup did not
+        else:
+            # an earlier upsert died between the two renames below:
+            # ``.old`` is the last complete registry
+            os.rename(old, registry_dir)
+    rows = batch.select(
+        "series_hash",
+        F.col("ts_ns").alias("first_seen_ns"),
+        F.col("ts_ns").alias("last_seen_ns"),
+        "name",
+        "labels",
+    )
+    if os.path.isdir(registry_dir):
+        rows = rows.unionByName(spark.read.parquet(registry_dir))
+    rows.groupBy("series_hash").agg(
+        F.min("first_seen_ns").alias("first_seen_ns"),
+        F.max("last_seen_ns").alias("last_seen_ns"),
         F.first("name").alias("name"),
         F.first("labels").alias("labels"),
-    )
-
-    def reagg(df: DataFrame) -> DataFrame:
-        return df.groupBy("series_hash").agg(
-            F.min("first_seen_ns").alias("first_seen_ns"),
-            F.max("last_seen_ns").alias("last_seen_ns"),
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
-        )
-
-    merge_upsert(spark, agg, registry_dir, "series_hash", reagg)
+    ).write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(registry_dir):
+        os.rename(registry_dir, old)
+    os.rename(tmp, registry_dir)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def retention_sweep(table_dir: str, keep_days: int, now_date: str) -> list[str]:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -103,11 +104,38 @@ def test_series_registry_upsert(spark, tmp_path):
         "name string, labels map<string,string>, ts_ns long",
     ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
     upsert_series_registry(spark, batch2, reg)
-    rows = {r["name"]: r for r in spark.read.parquet(reg).collect()}
-    assert len(rows) == 2
-    assert rows["m1"]["first_seen_ns"] == 50
-    assert rows["m1"]["last_seen_ns"] == 900
-    assert rows["m2"]["first_seen_ns"] == 200
+
+    def registry():
+        return sorted(
+            (r["name"], r["first_seen_ns"], r["last_seen_ns"])
+            for r in spark.read.parquet(reg).collect()
+        )
+
+    want = [("m1", 50, 900), ("m2", 200, 200)]
+    assert registry() == want
+    # foreachBatch is at-least-once: a replayed batch changes nothing
+    upsert_series_registry(spark, batch2, reg)
+    assert registry() == want
+    # the swap leaves no side directory behind
+    assert not os.path.exists(reg + ".tmp")
+    assert not os.path.exists(reg + ".old")
+    # an upsert that died between its two renames left only .old:
+    # the next upsert restores it and keeps every earlier series
+    os.rename(reg, reg + ".old")
+    batch3 = spark.createDataFrame(
+        [("m3", {"i": "c"}, 300)],
+        "name string, labels map<string,string>, ts_ns long",
+    ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
+    upsert_series_registry(spark, batch3, reg)
+    want.append(("m3", 300, 300))
+    assert registry() == want
+    assert not os.path.exists(reg + ".old")
+    # one that died after the swap, before removing .old: the stale
+    # copy is dropped and the upsert goes on
+    shutil.copytree(reg, reg + ".old")
+    upsert_series_registry(spark, batch3, reg)
+    assert registry() == want
+    assert not os.path.exists(reg + ".old")
 
 
 def test_series_key_canonical(spark):
@@ -217,40 +245,6 @@ def test_tail_logs_follows_matching_lines(spark, tmp_path):
             {"service": "service"},
             schema,
         )
-
-
-def test_merge_upsert_prunes_untouched_buckets(spark, tmp_path):
-    """A second batch touching one key must rewrite only that key's
-    hash bucket; other bucket directories stay byte-identical."""
-    import os
-
-    from oteldb_spark.streaming.ingest import merge_upsert
-
-    table = str(tmp_path / "t")
-
-    def reagg(df):
-        return df.groupBy("k").agg(F.sum("v").alias("v"))
-
-    base = spark.createDataFrame(
-        [(f"key{i}", 1) for i in range(40)], "k string, v long"
-    )
-    merge_upsert(spark, base, table, "k", reagg, n_buckets=8)
-    all_buckets = sorted(
-        e for e in os.listdir(table) if e.startswith("__bucket=")
-    )
-    assert len(all_buckets) > 1
-    snap = {
-        b: sorted(os.listdir(os.path.join(table, b))) for b in all_buckets
-    }
-    one = spark.createDataFrame([("key0", 10)], "k string, v long")
-    touched = merge_upsert(spark, one, table, "k", reagg, n_buckets=8)
-    assert len(touched) == 1
-    hit = f"__bucket={touched[0]}"
-    for b in all_buckets:
-        if b != hit:
-            assert sorted(os.listdir(os.path.join(table, b))) == snap[b]
-    rows = {r.k: r.v for r in spark.read.parquet(table).collect()}
-    assert rows["key0"] == 11 and rows["key1"] == 1 and len(rows) == 40
 
 
 def test_span_interval_join_is_watermarked_both_sides(spark, tmp_path):

@@ -11,6 +11,7 @@ rows).  Usage: python tools/bench_ingest.py [n_payloads] [series_per]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -81,6 +82,66 @@ def measure_otlp(
     }
 
 
+def _payload_stream(spark, src: str, payloads: list[bytes], copies: int):
+    """Land ``copies`` × ``payloads`` as request files under ``src``
+    and return a ``binaryFile`` stream of their bodies (``payload``)."""
+    from pyspark.sql import functions as F
+
+    os.makedirs(src)
+    for c in range(copies):
+        for i, b in enumerate(payloads):
+            with open(f"{src}/req_{c}_{i:05d}.bin", "wb") as fh:
+                fh.write(b)
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, length long,"
+            " content binary"
+        )
+        .option("pathGlobFilter", "*.bin")
+        .load(src)
+        .select(F.col("content").alias("payload"))
+    )
+
+
+def _ingest_points(spark, flat, reg: str, store: str, ckpt: str) -> float:
+    """Drain the flat point stream through foreachBatch { series-
+    registry upsert + date-partitioned store append }; returns the
+    seconds from stream start to the availableNow drain."""
+    from oteldb_spark.streaming.ingest import upsert_series_registry
+
+    def sink(batch, _bid):
+        # two actions per batch (registry upsert + append): persist so
+        # the wire decode runs once, not twice (guide §5) — measured
+        # 2x the Python-boundary cost of the batch
+        batch.persist()
+        try:
+            upsert_series_registry(
+                spark,
+                batch.select("series_hash", "name", "labels", "ts_ns"),
+                reg,
+            )
+            (
+                batch.drop("labels")
+                .write.mode("append")
+                .partitionBy("date")
+                .parquet(store)
+            )
+        finally:
+            batch.unpersist(blocking=False)
+
+    t0 = time.time()
+    q = (
+        flat.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return time.time() - t0
+
+
 def measure_otlp_e2e(
     spark,
     n_payloads: int = 256,
@@ -109,9 +170,6 @@ def measure_otlp_e2e(
 
     from oteldb_spark.scratch import scratch_dir
     from oteldb_spark.sources import otlp_pb as pb
-    from oteldb_spark.streaming.ingest import upsert_series_registry
-
-    import os as _os
 
     total_points = n_copies * n_payloads * series_per * samples_per
     work = scratch_dir(prefix="otlp_e2e_")
@@ -119,27 +177,9 @@ def measure_otlp_e2e(
     def run(
         tag: str, payloads: list[bytes], copies: int = 1, verify: bool = True
     ) -> float:
-        src = f"{work}/{tag}/in"
         store = f"{work}/{tag}/points"
-        reg = f"{work}/{tag}/registry"
-        ckpt = f"{work}/{tag}/ckpt"
-        _os.makedirs(src)
-        for c in range(copies):
-            for i, b in enumerate(payloads):
-                with open(f"{src}/req_{c}_{i:05d}.bin", "wb") as fh:
-                    fh.write(b)
-        raw = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp, length long,"
-                " content binary"
-            )
-            .option("pathGlobFilter", "*.bin")
-            .load(src)
-        )
-        flat = pb.pb_metrics(
-            raw.select(F.col("content").alias("payload"))
-        ).select(
+        raw = _payload_stream(spark, f"{work}/{tag}/in", payloads, copies)
+        flat = pb.pb_metrics(raw).select(
             "name",
             "labels",
             "ts_ns",
@@ -149,38 +189,9 @@ def measure_otlp_e2e(
                 F.timestamp_millis((F.col("ts_ns") / 1_000_000).cast("long"))
             ).alias("date"),
         )
-
-        def sink(batch, _bid):
-            # the sink takes TWO actions on the micro-batch (registry
-            # MERGE + store append); un-persisted, each action re-runs
-            # the whole wire decode (guide §5) — measured 2x the
-            # Python-boundary cost of the batch
-            batch.persist()
-            try:
-                upsert_series_registry(
-                    spark,
-                    batch.select("series_hash", "name", "labels", "ts_ns"),
-                    reg,
-                )
-                (
-                    batch.drop("labels")
-                    .write.mode("append")
-                    .partitionBy("date")
-                    .parquet(store)
-                )
-            finally:
-                batch.unpersist(blocking=False)
-
-        t0 = time.time()
-        q = (
-            flat.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        dt = _ingest_points(
+            spark, flat, f"{work}/{tag}/registry", store, f"{work}/{tag}/ckpt"
         )
-        q.awaitTermination()
-        dt = time.time() - t0
         if verify:
             n = spark.read.parquet(store).count()
             assert n == copies * len(payloads) * series_per * samples_per, n
@@ -277,8 +288,9 @@ def measure_prw_e2e(
 ) -> dict:
     """END-TO-END streaming ingest: WriteRequest wire files →
     binaryFile stream → distributed snappy+proto decode (prw_points) →
-    series-hash flatten → foreachBatch { series-registry MERGE
-    (bucket-pruned merge_upsert) + date-partitioned store append }.
+    series-hash flatten → foreachBatch { series-registry upsert
+    (whole-registry rewrite and directory swap) + date-partitioned
+    store append }.
 
     The decode-only row (:func:`measure_prw`) is a microbench; the
     reference's 144.3k pts/s baseline (dev/local/ch-bench/README.md:
@@ -297,71 +309,23 @@ def measure_prw_e2e(
 
     from oteldb_spark.scratch import scratch_dir
     from oteldb_spark.sources.otlp import series_key
-    from oteldb_spark.streaming.ingest import upsert_series_registry
-
-    import os as _os
 
     total_points = n_copies * n_payloads * series_per * samples_per
     work = scratch_dir(prefix="prw_e2e_")
 
     def run(tag: str, payloads: list[bytes], copies: int = 1) -> float:
-        src = f"{work}/{tag}/in"
         store = f"{work}/{tag}/points"
-        reg = f"{work}/{tag}/registry"
-        ckpt = f"{work}/{tag}/ckpt"
-        _os.makedirs(src)
-        for c in range(copies):
-            for i, b in enumerate(payloads):
-                with open(f"{src}/req_{c}_{i:05d}.bin", "wb") as fh:
-                    fh.write(b)
-        raw = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp, length long,"
-                " content binary"
-            )
-            .option("pathGlobFilter", "*.bin")
-            .load(src)
-        )
-        flat = prw.prw_points(
-            raw.select(F.col("content").alias("payload"))
-        ).select(
+        raw = _payload_stream(spark, f"{work}/{tag}/in", payloads, copies)
+        flat = prw.prw_points(raw).select(
             "name",
             "labels",
             (F.col("ts_ms") * 1_000_000).alias("ts_ns"),
             "value",
             F.to_date(F.timestamp_millis(F.col("ts_ms"))).alias("date"),
         ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
-
-        def sink(batch, _bid):
-            # two actions per batch (registry MERGE + append): persist
-            # so the snappy+proto decode runs once, not twice (guide §5)
-            batch.persist()
-            try:
-                upsert_series_registry(
-                    spark,
-                    batch.select("series_hash", "name", "labels", "ts_ns"),
-                    reg,
-                )
-                (
-                    batch.drop("labels")
-                    .write.mode("append")
-                    .partitionBy("date")
-                    .parquet(store)
-                )
-            finally:
-                batch.unpersist(blocking=False)
-
-        t0 = time.time()
-        q = (
-            flat.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        dt = _ingest_points(
+            spark, flat, f"{work}/{tag}/registry", store, f"{work}/{tag}/ckpt"
         )
-        q.awaitTermination()
-        dt = time.time() - t0
         n = spark.read.parquet(store).count()
         assert n == copies * len(payloads) * series_per * samples_per, n
         return dt
