@@ -10,15 +10,18 @@ remainder is fetched from storage and the watermark is extended
 (entry.go merge).  A ``SafetyLag`` keeps points near ``now`` out of
 the cache (cache.go:36-44 Options) so late arrivals are not frozen.
 
-Spark-native analog, at DataFrame granularity instead of per-series
-blocks: one cache entry per ``(query key, step, grid alignment)``,
-stored as a parquet directory — on a real cluster that directory
-lives on shared storage, the cached slice is read *distributed* and
-unioned with the freshly-computed steps without anything passing
-through the driver, and write-back appends only the new step rows as
-new parquet files (lz4 block compression in the reference ≙ parquet
-column encoding + snappy here).  Watermark metadata is a tiny JSON
-sidecar.
+Spark-native analog at DataFrame granularity: one in-memory entry per
+``(query key, step, grid alignment)`` — a watermark and one
+``pyarrow.Table`` of step rows — in an LRU dict behind one lock (the
+reference keeps its blocks in memory behind ``locks[256]``).  The
+facades collect every answer anyway, so each uncovered gap is computed
+and collected once (capped at the facades' row limit + 1), merged, and
+returned with the cached rows as one ``createDataFrame(arrow)``: a
+``LocalRelation`` whose collect runs no Spark job.  A merge replaces
+the entry's rows for its steps, so a concurrent fill or a replay never
+duplicates rows; a crash loses only the cache.  Over
+``MAX_CACHE_BYTES`` of Arrow data, whole least-recently-used entries
+are evicted.
 
 Splitting the step range is exact because every step value depends
 only on source data in that step's own trailing window: computing
@@ -31,16 +34,23 @@ the extra steps.
 
 from __future__ import annotations
 
-import json
-import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
-from hashlib import sha256
-from typing import Callable
+from functools import reduce
+from typing import Callable, NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+
+from ..api.serializers import DEFAULT_MAX_RESULT_ROWS
 
 ComputeFn = Callable[[int, int], DataFrame]
 """(start_us, end_us) -> step rows for the grid steps inside the range."""
+
+MAX_CACHE_BYTES = 64 << 20
+"""Arrow bytes all entries may hold before LRU eviction."""
 
 
 @dataclass
@@ -53,53 +63,43 @@ class CacheStats:
     skipped_inserts: int = 0
 
 
-@dataclass
-class _Meta:
+class _Entry(NamedTuple):
     lo_us: int
     hi_us: int
-    step_us: int
-    align_us: int
+    rows: pa.Table
 
 
 def _grid_floor(ts_us: int, step_us: int, align_us: int) -> int:
     return (ts_us - align_us) // step_us * step_us + align_us
 
 
+def _concat(tables: list[pa.Table]) -> pa.Table:
+    return pa.concat_tables(tables, promote_options="default").combine_chunks()
+
+
+def _in_steps(rows: pa.Table, lo_us: int, hi_us: int):
+    st = rows["step_us"]
+    return pc.and_(pc.greater_equal(st, lo_us), pc.less_equal(st, hi_us))
+
+
 @dataclass
 class StepResultCache:
-    """Watermarked parquet cache for ``(labels..., step_us, value)`` frames.
+    """Watermarked in-memory cache of ``(labels..., step_us, value)`` rows.
 
-    ``safety_lag_us`` mirrors Options.SafetyLag (cache.go:38-40):
-    steps newer than ``now_us - safety_lag_us`` are returned but not
-    persisted, so the next query recomputes them.  Pass ``now_us``
-    explicitly — the engine has no business reading the wall clock
-    inside a plan.
+    ``cache_dir`` is unread — entries live in process memory; the
+    field stays so existing ``StepResultCache(cache_dir, ...)`` calls
+    keep working.  ``safety_lag_us`` mirrors Options.SafetyLag
+    (cache.go:38-40): steps newer than ``now_us - safety_lag_us`` are
+    returned but not stored, so the next query recomputes them.  Pass
+    ``now_us`` explicitly — the engine has no business reading the
+    wall clock inside a plan.
     """
 
-    cache_dir: str
+    cache_dir: str | None = None
     safety_lag_us: int = 60_000_000
     stats: CacheStats = field(default_factory=CacheStats)
-
-    def _entry(self, key: str, step_us: int, align_us: int) -> tuple[str, str]:
-        h = sha256(f"{key}|{step_us}|{align_us}".encode()).hexdigest()[:24]
-        base = os.path.join(self.cache_dir, h)
-        return os.path.join(base, "data"), os.path.join(base, "meta.json")
-
-    @staticmethod
-    def _read_meta(meta_path: str) -> _Meta | None:
-        try:
-            with open(meta_path) as f:
-                return _Meta(**json.load(f))
-        except (OSError, ValueError, TypeError):
-            return None
-
-    @staticmethod
-    def _write_meta(meta_path: str, meta: _Meta) -> None:
-        os.makedirs(os.path.dirname(meta_path), exist_ok=True)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta.__dict__, f)
-        os.replace(tmp, meta_path)
+    _entries: OrderedDict = field(default_factory=OrderedDict, init=False, repr=False)
+    _lock: threading.Lock = field(default_factory=threading.Lock, init=False)
 
     def query_range(
         self,
@@ -113,83 +113,82 @@ class StepResultCache:
     ) -> DataFrame:
         """Steps of ``key`` on the grid ``start_us + k*step_us`` ≤ end_us.
 
-        Computes only the grid ranges the watermark doesn't cover,
-        appends them to the store (minus the safety-lag tail), and
+        Computes and collects only the grid ranges the watermark
+        doesn't cover, stores them minus the safety-lag tail, and
         returns the requested range as one DataFrame.
         """
         align_us = start_us % step_us
-        data_dir, meta_path = self._entry(key, step_us, align_us)
-        meta = self._read_meta(meta_path)
+        ekey = (key, step_us, align_us)
         grid_hi = _grid_floor(end_us, step_us, align_us)  # last step ≤ end
-        cutoff = (
-            None
-            if now_us is None
-            else _grid_floor(now_us - self.safety_lag_us, step_us, align_us)
-        )
+        cutoff = None
+        if now_us is not None:
+            cutoff = _grid_floor(now_us - self.safety_lag_us, step_us, align_us)
+        with self._lock:
+            ent = self._entries.get(ekey)
+            if ent is None:
+                self.stats.misses += 1
+            else:
+                self._entries.move_to_end(ekey)
+                if ent.lo_us <= start_us and grid_hi <= ent.hi_us:
+                    self.stats.hits += 1
+                else:
+                    self.stats.partial_hits += 1
 
         # uncovered grid ranges to compute, each (s, e) inclusive
         gaps: list[tuple[int, int]] = []
-        if meta is None:
-            self.stats.misses += 1
+        tables: list[pa.Table] = []
+        if ent is None:
             gaps.append((start_us, grid_hi))
         else:
-            if meta.lo_us <= start_us and grid_hi <= meta.hi_us:
-                self.stats.hits += 1
-            else:
-                self.stats.partial_hits += 1
-            if start_us < meta.lo_us:
-                gaps.append((start_us, meta.lo_us - step_us))
-            if grid_hi > meta.hi_us:
-                gaps.append((meta.hi_us + step_us, grid_hi))
+            if start_us < ent.lo_us:
+                gaps.append((start_us, ent.lo_us - step_us))
+            if grid_hi > ent.hi_us:
+                gaps.append((ent.hi_us + step_us, grid_hi))
+            tables.append(ent.rows.filter(_in_steps(ent.rows, start_us, grid_hi)))
 
-        parts: list[DataFrame] = []
-        if meta is not None:
-            cached = spark.read.parquet(data_dir)
-            parts.append(cached.where(cached["step_us"].between(start_us, grid_hi)))
-
-        new_lo = meta.lo_us if meta is not None else start_us
-        new_hi = meta.hi_us if meta is not None else None
-        stored = False
+        plans: list[DataFrame] = []
         for s, e in gaps:
             df = compute(s, e)
-            store_e = e if cutoff is None else min(e, cutoff)
-            # A head gap ([s, e] with e = meta.lo - step) may only be
-            # persisted when stored in FULL: a safety-lag truncation
-            # (store_e < e) would leave steps (store_e, meta.lo) inside
-            # the extended watermark with no data — later queries would
-            # count them as hits and silently return incomplete results.
-            # Tail/miss gaps start contiguous with the watermark, so a
-            # truncated store still merges cleanly.
-            head_gap = meta is not None and e < meta.lo_us
-            if store_e < s or (head_gap and store_e < e):
-                self.stats.skipped_inserts += 1
-                parts.append(df.where(df["step_us"].between(start_us, grid_hi)))
+            rows = df.limit(DEFAULT_MAX_RESULT_ROWS + 1).toArrow()
+            if rows.num_rows > DEFAULT_MAX_RESULT_ROWS:
+                # too large to hold: serve the gap from its plan, so
+                # the facade's row cap fires as it does uncached
+                with self._lock:
+                    self.stats.skipped_inserts += 1
+                plans.append(df.where(df["step_us"].between(start_us, grid_hi)))
                 continue
-            df.where(df["step_us"].between(s, store_e)).write.mode("append").parquet(
-                data_dir
-            )
-            stored = True
-            new_lo = min(new_lo, s)
-            new_hi = store_e if new_hi is None else max(new_hi, store_e)
-            # Serve the stored slice from the files the write just
-            # produced: the write-back action above already ran the gap
-            # query in full, so routing the returned frame through the
-            # plan would compute it a second time when the caller
-            # materializes.  Stored files hold disjoint step ranges, so
-            # the range filter selects exactly this gap's rows.  Only
-            # the safety-lag tail (store_e, e] — deliberately not
-            # persisted — still comes from the plan.
-            ret_lo, ret_hi = max(s, start_us), min(store_e, grid_hi)
-            if ret_lo <= ret_hi:
-                back = spark.read.parquet(data_dir)
-                parts.append(back.where(back["step_us"].between(ret_lo, ret_hi)))
-            if store_e < e:
-                tail_lo = max(store_e + step_us, start_us)
-                parts.append(df.where(df["step_us"].between(tail_lo, grid_hi)))
-        if stored:
-            self._write_meta(meta_path, _Meta(new_lo, new_hi, step_us, align_us))
+            store_e = e if cutoff is None else min(e, cutoff)
+            self._merge(ekey, s, store_e, rows)
+            tables.append(rows.filter(_in_steps(rows, start_us, grid_hi)))
 
-        result = parts[0]
-        for df in parts[1:]:
-            result = result.unionByName(df)
-        return result
+        frames = plans
+        if tables:
+            frames = [spark.createDataFrame(_concat(tables)), *plans]
+        return reduce(DataFrame.unionByName, frames)
+
+    def _merge(self, ekey: tuple, s: int, e: int, rows: pa.Table) -> None:
+        """Store ``rows``' steps ``[s, e]`` in the entry, replacing any
+        rows it holds for those steps.  An empty ``[s, e]``, or one not
+        contiguous with the entry's watermark (a head gap cut short by
+        the safety lag), is skipped: extending the watermark over it
+        would count steps without data as covered."""
+        step_us = ekey[1]
+        with self._lock:
+            ent = self._entries.get(ekey)
+            disjoint = ent is not None and (
+                s > ent.hi_us + step_us or e < ent.lo_us - step_us
+            )
+            if e < s or disjoint:
+                self.stats.skipped_inserts += 1
+                return
+            new = rows.filter(_in_steps(rows, s, e))
+            if ent is not None:
+                kept = ent.rows.filter(pc.invert(_in_steps(ent.rows, s, e)))
+                new = _concat([kept, new])
+                s, e = min(s, ent.lo_us), max(e, ent.hi_us)
+            self._entries[ekey] = _Entry(s, e, new)
+            self._entries.move_to_end(ekey)
+            total = sum(x.rows.nbytes for x in self._entries.values())
+            while total > MAX_CACHE_BYTES:
+                _, old = self._entries.popitem(last=False)
+                total -= old.rows.nbytes

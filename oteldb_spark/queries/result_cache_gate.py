@@ -4,7 +4,7 @@ internal/metricscache).
 ``promql_rate_cached`` serves the same rate query as ``promql_rate``
 through a cold StepResultCache: the first call populates the front
 half of the window, the second is a partial hit that computes only
-the back half and unions it with the cached parquet slice.  Values
+the back half and returns it with the cached in-memory rows.  Values
 must equal the uncached computation, so the oracle is promql_rate's
 oracle, rebuilt here from the same primitives (this module registers
 early so the newest machinery sits in the driver-certified prefix —
@@ -14,13 +14,11 @@ forward).
 
 from __future__ import annotations
 
-
 from pyspark.sql import functions as F
 
 from ..operators.rate import rate_family, rate_family_oracle_sql
 from ..plans.result_cache import StepResultCache
 from ..signals import COUNTERS_CTE, counter_points_frame
-from ..scratch import scratch_dir
 from .registry import END_US, RANGE_US, START_US, STEP_US, register
 
 _SERIES = ["mtype", "instance"]
@@ -62,7 +60,7 @@ def promql_rate_cached(spark, sf_dir):
             range_us=RANGE_US,
         )
 
-    cache = StepResultCache(scratch_dir(prefix="oteldb_rc_"))
+    cache = StepResultCache()
     mid = START_US + 15 * 86_400_000_000  # on the 6h step grid
     cache.query_range(spark, "rate", START_US, mid, STEP_US, compute)
     out = cache.query_range(spark, "rate", START_US, END_US, STEP_US, compute)
@@ -85,11 +83,11 @@ def _compute_fn(pts):
     return compute
 
 
-# cold fill: fresh cache each call — measures compute + write-back
+# cold fill: fresh cache each call — measures compute + collect + merge
 @register("promql_rate_cached_cold", _oracle())
 def promql_rate_cached_cold(spark, sf_dir):
     pts = counter_points_frame(spark, sf_dir)
-    cache = StepResultCache(scratch_dir(prefix="oteldb_rc_"))
+    cache = StepResultCache()
     out = cache.query_range(
         spark, "rate", START_US, END_US, STEP_US, _compute_fn(pts)
     )
@@ -97,7 +95,7 @@ def promql_rate_cached_cold(spark, sf_dir):
 
 
 # warm hit: cache persists across calls per sf_dir — the first call
-# fills, every later call is a pure watermark hit reading parquet.
+# fills, every later call is a pure watermark hit served from memory.
 # bench.py's best-of-2 loop therefore times the HIT, which is the
 # number the reference's cache exists to serve (cache.go CacheStats
 # hits); the cold path is benched separately above.
@@ -107,9 +105,7 @@ _WARM_CACHES: dict[str, StepResultCache] = {}
 @register("promql_rate_cached_warm", _oracle())
 def promql_rate_cached_warm(spark, sf_dir):
     pts = counter_points_frame(spark, sf_dir)
-    cache = _WARM_CACHES.setdefault(
-        sf_dir, StepResultCache(scratch_dir(prefix="oteldb_rcw_"))
-    )
+    cache = _WARM_CACHES.setdefault(sf_dir, StepResultCache())
     out = cache.query_range(
         spark, "rate", START_US, END_US, STEP_US, _compute_fn(pts)
     )

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half the host's
+    ``MemTotal``, capped at 48g (48g where /proc/meminfo is absent),
+    so the heap alone cannot outgrow a small host's memory."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(kib // 2048, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "oteldb-spark",
     cpus: int | None = None,
@@ -50,7 +62,10 @@ def get_spark(
         # µs files are unaffected.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # ns-precision epochs live in LongType columns; TimestampType is
         # µs and only derived for windowing, so no ambiguity policies

@@ -1,9 +1,12 @@
 """StepResultCache (plans/result_cache.py) — watermark semantics of
 ref internal/metricscache: full hit, partial hit computing only the
-uncovered remainder, contiguous bridging for disjoint ranges, and the
-SafetyLag write-back exclusion."""
+uncovered remainder, contiguous bridging for disjoint ranges, the
+SafetyLag write-back exclusion; and the in-memory store's own rules:
+one compute per gap, concurrent fills without duplicates, LRU
+eviction and the row cap."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from oteldb_spark.plans.result_cache import StepResultCache
@@ -142,37 +145,132 @@ def test_safety_lag_truncated_head_gap_not_claimed(spark, tmp_path):
     assert all(vals[T0 + i * STEP] == float(i) for i in range(9))
 
 
-def test_stored_gap_served_from_parquet_not_recomputed(spark, tmp_path):
-    """The write-back action already ran the gap query; the returned
-    frame must read those files back instead of carrying the compute
-    plan (which would execute the whole gap query a second time when
-    the caller materializes — the r13 promql_rate_cached_cold fix).
-    Only a safety-lag tail, which is deliberately not persisted, may
-    remain in-plan."""
+def test_each_gap_computed_once_and_served_locally(spark):
+    """Every gap is computed and collected once: the returned frame is
+    a local scan of the collected rows, so materializing it runs no
+    compute plan again — also for a safety-lag tail, which is returned
+    but not stored."""
     calls = []
-    cache = StepResultCache(str(tmp_path / "rc"))
+
+    def compute(s_us, e_us):
+        calls.append((s_us, e_us))
+        n = (e_us - s_us) // STEP + 1
+        return spark.range(n).select(
+            F.lit("a").alias("series"),
+            (F.lit(s_us) + F.col("id") * STEP).alias("step_us"),
+            (F.lit((s_us - T0) // STEP) + F.col("id")).cast("double").alias("value"),
+        )
+
+    def check(out, n):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Range" not in plan, plan
+        vals = {r.step_us: r.value for r in out.collect()}
+        assert vals == {T0 + i * STEP: float(i) for i in range(n)}
+
+    cache = StepResultCache(safety_lag_us=2 * STEP)
+    check(cache.query_range(spark, "q", T0, T0 + 5 * STEP, STEP, compute), 6)
+    assert calls == [(T0, T0 + 5 * STEP)]
+
+    # partial hit with a safety-lag tail: cutoff = T0 + 7*STEP, so the
+    # gap [6, 9] stores [6, 7] and serves [8, 9] from the same rows
+    now = T0 + 9 * STEP
+    out = cache.query_range(spark, "q", T0, T0 + 9 * STEP, STEP, compute, now_us=now)
+    check(out, 10)
+    assert calls[1:] == [(T0 + 6 * STEP, T0 + 9 * STEP)]
+    assert cache.stats.partial_hits == 1
+
+    # only the unstored tail is computed again
+    out = cache.query_range(spark, "q", T0, T0 + 9 * STEP, STEP, compute, now_us=now)
+    check(out, 10)
+    assert calls[2:] == [(T0 + 8 * STEP, T0 + 9 * STEP)]
+
+
+def test_concurrent_fills_return_direct_rows_without_duplicates(spark):
+    """Four threads fill the same entry at once: each answer equals the
+    direct rows, and the overlapping merges leave no duplicated step."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    calls = []
+    cache = StepResultCache()
     compute = _compute_factory(spark, calls)
+    cache.query_range(spark, "q", T0, T0 + 3 * STEP, STEP, compute)
+    barrier = threading.Barrier(4)
 
-    out = cache.query_range(spark, "q", T0, T0 + 9 * STEP, STEP, compute)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" in plan.lower()  # served from the stored slice
-    # the compute frame is an Arrow/local scan — none may remain
-    assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
-    assert _steps(out) == [T0 + i * STEP for i in range(10)]
+    def client(i):
+        barrier.wait()
+        out = cache.query_range(spark, "q", T0, T0 + (8 + i) * STEP, STEP, compute)
+        return sorted((r.step_us, r.value) for r in out.collect())
 
-    # with a safety lag, the unpersisted tail stays in-plan, the
-    # stored prefix still comes from parquet, and rows are complete
-    cache2 = StepResultCache(str(tmp_path / "rc2"), safety_lag_us=2 * STEP)
-    now = T0 + 9 * STEP  # cutoff = T0 + 7*STEP
-    out2 = cache2.query_range(
-        spark, "q", T0, T0 + 9 * STEP, STEP, compute, now_us=now
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        got = list(pool.map(client, range(4)))
+    for i, rows in enumerate(got):
+        assert rows == [(T0 + k * STEP, float(k)) for k in range(9 + i)]
+    out = cache.query_range(spark, "q", T0, T0 + 11 * STEP, STEP, compute)
+    rows = sorted((r.step_us, r.value) for r in out.collect())
+    assert rows == [(T0 + k * STEP, float(k)) for k in range(12)]
+
+
+def test_lru_evicts_whole_entry(spark, monkeypatch):
+    """Over the byte bound the least-recently-used entry goes whole;
+    its next lookup is a miss that recomputes correct rows."""
+    from oteldb_spark.plans import result_cache
+
+    calls = []
+    cache = StepResultCache()
+    compute = _compute_factory(spark, calls)
+    cache.query_range(spark, "q1", T0, T0 + 9 * STEP, STEP, compute)
+    one = cache._entries[("q1", STEP, T0 % STEP)].rows.nbytes
+    monkeypatch.setattr(result_cache, "MAX_CACHE_BYTES", one + one // 2)
+
+    cache.query_range(spark, "q2", T0, T0 + 9 * STEP, STEP, compute)
+    assert [k[0] for k in cache._entries] == ["q2"]
+    out = cache.query_range(spark, "q1", T0, T0 + 9 * STEP, STEP, compute)
+    assert cache.stats.misses == 3 and len(calls) == 3
+    vals = {r.step_us: r.value for r in out.collect()}
+    assert vals == {T0 + i * STEP: float(i) for i in range(10)}
+    assert [k[0] for k in cache._entries] == ["q1"]
+
+
+def test_gap_over_row_cap_not_stored(spark, monkeypatch):
+    """A gap with more rows than the facade cap is neither stored nor
+    collected in full: it is returned as its plan, so the cached
+    facade raises ResultTooLargeError exactly like an uncached one."""
+    from oteldb_spark.api.serializers import ResultTooLargeError
+    from oteldb_spark.engine import MetricSource, PromQLEngine
+    from oteldb_spark.plans import result_cache
+
+    monkeypatch.setattr(result_cache, "DEFAULT_MAX_RESULT_ROWS", 3)
+    calls = []
+    cache = StepResultCache()
+    out = cache.query_range(
+        spark, "q", T0, T0 + 9 * STEP, STEP, _compute_factory(spark, calls)
     )
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" in plan2.lower()
-    assert "LocalTableScan" in plan2 or "ExistingRDD" in plan2
-    vals = {r.step_us: r.value for r in out2.collect()}
-    assert sorted(vals) == [T0 + i * STEP for i in range(10)]
-    assert all(vals[T0 + i * STEP] == float(i) for i in range(10))
+    assert _steps(out) == [T0 + i * STEP for i in range(10)]
+    assert cache.stats.skipped_inserts == 1 and not cache._entries
+
+    n = 12  # samples per series, one per step
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "mtype": [f"m{i}" for i in range(4) for _ in range(n)],
+                "instance": ["h"] * (4 * n),
+                "ts_us": [T0 + k * STEP for _ in range(4) for k in range(n)],
+                "counter_mod": [float(k) for _ in range(4) for k in range(n)],
+            }
+        )
+    )
+    src = MetricSource(
+        df=pts,
+        metrics={"events_value_total": "counter_mod"},
+        label_cols=["mtype", "instance"],
+    )
+    eng = PromQLEngine(source=src, max_result_rows=3, result_cache=cache)
+    with pytest.raises(ResultTooLargeError):
+        eng.query_range(
+            "rate(events_value_total[1m])", T0 + 6 * STEP, T0 + 9 * STEP, STEP
+        )
+    assert cache.stats.skipped_inserts == 2 and not cache._entries
 
 
 def test_different_key_and_alignment_are_separate_entries(spark, tmp_path):
