@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the ``oteldb_spark`` package: Python workers
+# import the daemon module and the UDF code from it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_mem() -> str:
     """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half the host's
@@ -62,6 +66,10 @@ def get_spark(
         # µs files are unaffected.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # workers fork from oteldb_spark/daemon.py, which stops the
+        # per-task re-read of pyspark.zip's directory (CPython < 3.13)
+        .config("spark.python.daemon.module", "oteldb_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),

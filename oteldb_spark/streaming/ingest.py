@@ -10,13 +10,12 @@ table.  The layout mirrors the MergeTree design (SURVEY §1.2):
   sortWithinPartitions(severity, service, ts)  ≈  ORDER BY key
   TTL  ≈  retention job dropping aged partitions
 
-The series registry (AggregatingMergeTree in the reference) is a
-``foreachBatch`` merge into one plain parquet directory: union the
-batch with the current registry, fold to one row per series, write the
-result beside it and swap the directories by two renames; an upsert
-that finds only the ``.old`` side of an interrupted swap restores it
-first.  On Delta Lake this becomes a single MERGE INTO; plain parquet
-needs the whole-registry rewrite."""
+The series registry (AggregatingMergeTree in the reference) is one
+parquet file: each micro-batch is folded to one row per series in
+Spark, merged with that file in Arrow on the driver, and published by
+an atomic ``os.replace`` of a hidden temp file.  ``points_sink`` is the
+metric stream's ``foreachBatch`` composition of that upsert with the
+date-partitioned append of the points."""
 
 from __future__ import annotations
 
@@ -165,41 +164,65 @@ def upsert_series_registry(
     """Merge a batch of (series_hash, name, labels, ts_ns) into the
     registry: min(first_seen), max(last_seen), any(name/labels).
 
-    The reference's AggregatingMergeTree folds these continuously at
-    insert; here the batch is unioned with the current registry, folded
-    to one row per series, written to ``<registry>.tmp`` and swapped
-    in: ``<registry>`` → ``<registry>.old``, ``.tmp`` → ``<registry>``,
-    then ``.old`` is removed.  The fold is idempotent, so a replayed
-    micro-batch leaves the rows unchanged.  Single writer, as under
-    foreachBatch."""
-    registry_dir = registry_dir.rstrip("/")
-    tmp, old = registry_dir + ".tmp", registry_dir + ".old"
-    if os.path.isdir(old):
-        if os.path.isdir(registry_dir):
-            shutil.rmtree(old)  # the swap finished, its cleanup did not
-        else:
-            # an earlier upsert died between the two renames below:
-            # ``.old`` is the last complete registry
-            os.rename(old, registry_dir)
-    rows = batch.select(
-        "series_hash",
-        F.col("ts_ns").alias("first_seen_ns"),
-        F.col("ts_ns").alias("last_seen_ns"),
-        "name",
-        "labels",
-    )
-    if os.path.isdir(registry_dir):
-        rows = rows.unionByName(spark.read.parquet(registry_dir))
-    rows.groupBy("series_hash").agg(
-        F.min("first_seen_ns").alias("first_seen_ns"),
-        F.max("last_seen_ns").alias("last_seen_ns"),
+    The reference's AggregatingMergeTree folds these at insert; here
+    the batch is folded to one row per series in Spark (one job, its
+    output bounded by the batch's distinct series), merged in Arrow
+    with the one registry file ``series.parquet`` and published by
+    ``os.replace`` of a hidden temp file that readers skip: a crash at
+    any line leaves the old file or the new one, complete.  The fold is
+    idempotent, so a replayed micro-batch changes no row.  Single
+    writer, as under foreachBatch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    new = batch.groupBy("series_hash").agg(
+        F.min("ts_ns").alias("first_seen_ns"),
+        F.max("ts_ns").alias("last_seen_ns"),
         F.first("name").alias("name"),
         F.first("labels").alias("labels"),
-    ).write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(registry_dir):
-        os.rename(registry_dir, old)
-    os.rename(tmp, registry_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    ).toArrow()
+    path = os.path.join(registry_dir, "series.parquet")
+    if os.path.exists(path):
+        # registry rows first: a known series keeps its name/labels
+        both = pa.concat_tables([pq.read_table(path).cast(new.schema), new])
+        g = (
+            both.append_column("row", pa.array(range(both.num_rows)))
+            .group_by("series_hash", use_threads=False)
+            .aggregate([("first_seen_ns", "min"), ("last_seen_ns", "max"),
+                        ("row", "min")])
+        )
+        new = both.take(g["row_min"])
+        new = new.set_column(1, new.field(1), g["first_seen_ns_min"])
+        new = new.set_column(2, new.field(2), g["last_seen_ns_max"])
+    os.makedirs(registry_dir, exist_ok=True)
+    tmp = os.path.join(registry_dir, ".series.parquet.tmp")
+    with open(tmp, "wb", buffering=0) as fh:
+        pq.write_table(new, fh)
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
+def points_sink(spark: SparkSession, registry_dir: str, table_dir: str):
+    """``foreachBatch`` function of a flat metric-point stream (columns
+    of ``pb_metrics`` plus ``date``): upsert the series registry, then
+    append the points without ``labels`` to the date-partitioned table
+    (the reference's metric inserter).  The batch is persisted for the
+    two actions, so the executor-side wire decode runs once."""
+
+    def sink(batch: DataFrame, _batch_id: int) -> None:
+        batch.persist()
+        try:
+            upsert_series_registry(
+                spark, batch.select("series_hash", "name", "labels", "ts_ns"),
+                registry_dir,
+            )
+            batch.drop("labels").write.mode("append").partitionBy("date").parquet(
+                table_dir
+            )
+        finally:
+            batch.unpersist(blocking=False)
+
+    return sink
 
 
 def retention_sweep(table_dir: str, keep_days: int, now_date: str) -> list[str]:

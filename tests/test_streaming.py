@@ -5,8 +5,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from oteldb_spark.sources.otlp import flatten_otlp_logs, series_key, OTLP_LOGS_SCHEMA
@@ -92,50 +92,59 @@ def test_stream_ingest_and_query(spark, tmp_path):
     assert spark.read.parquet(table).count() == 65
 
 
-def test_series_registry_upsert(spark, tmp_path):
+def test_series_registry_upsert(spark, tmp_path, monkeypatch):
     reg = str(tmp_path / "registry")
-    batch1 = spark.createDataFrame(
-        [("m1", {"i": "a"}, 100), ("m2", {"i": "b"}, 200)],
-        "name string, labels map<string,string>, ts_ns long",
-    ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
-    upsert_series_registry(spark, batch1, reg)
-    batch2 = spark.createDataFrame(
-        [("m1", {"i": "a"}, 50), ("m1", {"i": "a"}, 900)],
-        "name string, labels map<string,string>, ts_ns long",
-    ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
-    upsert_series_registry(spark, batch2, reg)
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            list(rows), "name string, labels map<string,string>, ts_ns long"
+        ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
 
     def registry():
         return sorted(
-            (r["name"], r["first_seen_ns"], r["last_seen_ns"])
+            (r["name"], r["labels"], r["first_seen_ns"], r["last_seen_ns"])
             for r in spark.read.parquet(reg).collect()
         )
 
-    want = [("m1", 50, 900), ("m2", 200, 200)]
+    def data_files():
+        return sorted(f for f in os.listdir(reg) if not f.startswith((".", "_")))
+
+    batch1 = batch(("m1", {"i": "a"}, 100), ("m2", {"i": "b"}, 200))
+    upsert_series_registry(spark, batch1, reg)
+    batch2 = batch(("m1", {"i": "a"}, 50), ("m1", {"i": "a"}, 900))
+    upsert_series_registry(spark, batch2, reg)
+    want = [("m1", {"i": "a"}, 50, 900), ("m2", {"i": "b"}, 200, 200)]
     assert registry() == want
     # foreachBatch is at-least-once: a replayed batch changes nothing
     upsert_series_registry(spark, batch2, reg)
     assert registry() == want
-    # the swap leaves no side directory behind
-    assert not os.path.exists(reg + ".tmp")
-    assert not os.path.exists(reg + ".old")
-    # an upsert that died between its two renames left only .old:
-    # the next upsert restores it and keeps every earlier series
-    os.rename(reg, reg + ".old")
-    batch3 = spark.createDataFrame(
-        [("m3", {"i": "c"}, 300)],
-        "name string, labels map<string,string>, ts_ns long",
-    ).withColumn("series_hash", series_key(F.col("name"), F.col("labels")))
-    upsert_series_registry(spark, batch3, reg)
-    want.append(("m3", 300, 300))
+    assert data_files() == ["series.parquet"]
+    assert spark.read.parquet(reg).schema.simpleString() == (
+        "struct<series_hash:string,first_seen_ns:bigint,last_seen_ns:bigint,"
+        "name:string,labels:map<string,string>>"
+    )
+    # an upsert that dies before publishing leaves the previous
+    # registry readable, with every earlier series
+    batch3 = batch(("m3", {"i": "c"}, 300))
+
+    def boom(src, dst):
+        raise OSError("crash before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", boom)
+        with pytest.raises(OSError, match="crash before the rename"):
+            upsert_series_registry(spark, batch3, reg)
     assert registry() == want
-    assert not os.path.exists(reg + ".old")
-    # one that died after the swap, before removing .old: the stale
-    # copy is dropped and the upsert goes on
-    shutil.copytree(reg, reg + ".old")
-    upsert_series_registry(spark, batch3, reg)
+    assert data_files() == ["series.parquet"]
+    # a stale hidden temp file (here: a torn write) is skipped by
+    # readers, and the next upsert overwrites it and succeeds
+    stale = os.path.join(reg, ".series.parquet.tmp")
+    with open(stale, "wb") as fh:
+        fh.write(b"PAR1 torn")
     assert registry() == want
-    assert not os.path.exists(reg + ".old")
+    upsert_series_registry(spark, batch3, reg)
+    assert registry() == sorted(want + [("m3", {"i": "c"}, 300, 300)])
+    assert os.listdir(reg) == ["series.parquet"]
 
 
 def test_series_key_canonical(spark):

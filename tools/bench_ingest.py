@@ -105,31 +105,13 @@ def _payload_stream(spark, src: str, payloads: list[bytes], copies: int):
 
 
 def _ingest_points(spark, flat, reg: str, store: str, ckpt: str) -> float:
-    """Drain the flat point stream through foreachBatch { series-
-    registry upsert + date-partitioned store append }; returns the
-    seconds from stream start to the availableNow drain."""
-    from oteldb_spark.streaming.ingest import upsert_series_registry
+    """Drain the flat point stream through the program's metric sink
+    (``points_sink``: series-registry upsert + date-partitioned store
+    append); returns the seconds from stream start to the availableNow
+    drain."""
+    from oteldb_spark.streaming.ingest import points_sink
 
-    def sink(batch, _bid):
-        # two actions per batch (registry upsert + append): persist so
-        # the wire decode runs once, not twice (guide §5) — measured
-        # 2x the Python-boundary cost of the batch
-        batch.persist()
-        try:
-            upsert_series_registry(
-                spark,
-                batch.select("series_hash", "name", "labels", "ts_ns"),
-                reg,
-            )
-            (
-                batch.drop("labels")
-                .write.mode("append")
-                .partitionBy("date")
-                .parquet(store)
-            )
-        finally:
-            batch.unpersist(blocking=False)
-
+    sink = points_sink(spark, reg, store)
     t0 = time.time()
     q = (
         flat.writeStream.foreachBatch(sink)
@@ -154,7 +136,7 @@ def measure_otlp_e2e(
     (internal/otelreceiver/receiver.go:47-90 → metric inserter):
     ExportMetricsServiceRequest wire files → binaryFile stream →
     distributed wire-walk decode (pb_metrics, series_hash JVM-side) →
-    foreachBatch { series-registry MERGE + date-partitioned store
+    foreachBatch { series-registry upsert + date-partitioned store
     append }.  Mirrors :func:`measure_prw_e2e` so BENCH carries both
     full-path ingest rows.
 
@@ -289,8 +271,8 @@ def measure_prw_e2e(
     """END-TO-END streaming ingest: WriteRequest wire files →
     binaryFile stream → distributed snappy+proto decode (prw_points) →
     series-hash flatten → foreachBatch { series-registry upsert
-    (whole-registry rewrite and directory swap) + date-partitioned
-    store append }.
+    (batch fold merged into one parquet file, published by an atomic
+    rename) + date-partitioned store append }.
 
     The decode-only row (:func:`measure_prw`) is a microbench; the
     reference's 144.3k pts/s baseline (dev/local/ch-bench/README.md:
