@@ -151,20 +151,19 @@ def profile_collapsed(df: DataFrame, stack_col: str = "stack",
 def tempo_search(traces_df: DataFrame) -> dict:
     """Trace assembly result → Tempo search response
     (TraceSearchMetadata list: traceID, rootServiceName, rootTraceName,
-    startTimeUnixNano, durationMs)."""
+    startTimeUnixNano, durationMs).  A trace without a root service
+    reports Tempo's text for a root span that has not arrived."""
     out = []
-    for r in traces_df.collect():
+    for r in bounded_collect(traces_df, DEFAULT_MAX_RESULT_ROWS):
+        d = r.asDict()
         out.append(
             {
-                "traceID": f"{int(r['trace_id']):032x}",
-                "rootServiceName": r["root_service"]
-                if "root_service" in traces_df.columns
-                else "frontend",
-                "rootTraceName": r["root_name"],
-                "startTimeUnixNano": str(int(r["start_us"]) * 1000)
-                if "start_us" in traces_df.columns
-                else "0",
-                "durationMs": int(r["trace_duration_us"] // 1000),
+                "traceID": f"{int(d['trace_id']):032x}",
+                "rootServiceName": d.get("root_service")
+                or "<root span not yet received>",
+                "rootTraceName": d["root_name"],
+                "startTimeUnixNano": str(int(d.get("start_us", 0)) * 1000),
+                "durationMs": int(d["trace_duration_us"] // 1000),
             }
         )
     return {"traces": out}

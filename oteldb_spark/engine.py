@@ -13,9 +13,9 @@ methods).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .api.serializers import (
     DEFAULT_MAX_RESULT_ROWS,
@@ -26,7 +26,6 @@ from .api.serializers import (
     prom_matrix,
     tempo_search,
 )
-from .functions import anchored_rlike
 from .logql import EvalParams, LogSource, compile_logql
 from .promql import MetricSource, PromParams, compile_promql
 from .traceql import SpanSource, compile_traceql
@@ -257,6 +256,7 @@ class LogQLEngine:
         full label universe)."""
         from pyspark.sql import functions as F
 
+        from .logql.compiler import select_streams
         from .logql.parser import parse as parse_logql
 
         base = self.source.df
@@ -264,30 +264,14 @@ class LogQLEngine:
             base = base.filter(F.col(self.source.ts_col) >= start_us)
         if end_us is not None:
             base = base.filter(F.col(self.source.ts_col) <= end_us)
-
+        # the selector semantics of query_range: severity case folding,
+        # hex-id matching, attrs-map labels
+        src = replace(self.source, df=base)
         matches = [match] if isinstance(match, str) else list(match or [])
-
-        def _filtered(sel_str):
-            df = base
-            q = parse_logql(sel_str)
-            sel = getattr(q, "selector", q)
-            for m in sel.matchers:
-                c = (
-                    F.col(self.source.label_cols[m.name])
-                    if m.name in self.source.label_cols
-                    else F.lit("")
-                )
-                df = df.filter(
-                    {
-                        "=": c == m.value,
-                        "!=": c != m.value,
-                        "=~": anchored_rlike(c, m.value),
-                        "!~": ~anchored_rlike(c, m.value),
-                    }[m.op]
-                )
-            return df
-
-        frames = [_filtered(s) for s in matches] or [base]
+        frames = [
+            select_streams(getattr(q, "selector", q), src).df
+            for q in map(parse_logql, matches)
+        ] or [base]
         skip = set(self.source.hexid_labels) | {"body"}
         cols = [
             F.col(col).alias(lbl)
@@ -625,90 +609,66 @@ class PromQLEngine:
         multi-matcher and time-bounded behavior,
         ``integration/prome2e/common_test.go:280-420``); the special
         label ``__name__`` enumerates metric names."""
-        from pyspark.sql import functions as F
-
-        from .functions.otel_labels import resolve_label_name
-        from .promql.compiler import _selector_points, _out_label_names
-        from .promql.parser import parse as parse_promql
+        from .functions.otel_labels import key_to_label, resolve_label_name
 
         if label == "__name__":
-            # metric names whose selector (if any) matches at least one
-            # point in range
-            names = [
-                name
-                for name in sorted(self.source.metrics)
-                if not match
-                or any(
-                    self._match_rows(sel, start_us, end_us, only=name)
-                    for sel in match
-                )
-            ]
-            return prom_labels(names)
-
-        resolved = resolve_label_name(label, self.source.label_cols)
-        if resolved is None:
-            return prom_labels([])
-        frames = []
-        if match:
-            for sel_str in match:
-                sel = parse_promql(sel_str)
-                pts = _selector_points(sel, self.source)
-                frames.append(pts)
+            if not match:
+                return prom_labels(sorted(self.source.metrics))
+            out_name = "__name__"
         else:
-            frames.append(
-                self.source.df.select(
-                    *[
-                        F.col(f"`{l}`").alias(n)
-                        for l, n in zip(
-                            self.source.label_cols,
-                            _out_label_names(self.source),
-                        )
-                    ],
-                    F.col(self.source.ts_col).alias("ts_us"),
-                )
-            )
-        from .functions.otel_labels import key_to_label
-
-        out_name = key_to_label(resolved)
-        u = None
-        for f in frames:
-            p = f.select(out_name, "ts_us")
-            u = p if u is None else u.unionByName(p)
-        if start_us is not None:
-            u = u.filter(F.col("ts_us") >= start_us)
-        if end_us is not None:
-            u = u.filter(F.col("ts_us") <= end_us)
+            resolved = resolve_label_name(label, self.source.label_cols)
+            if resolved is None:
+                return prom_labels([])
+            out_name = key_to_label(resolved)
+        pts = self._series_points(match, start_us, end_us)
         rows = bounded_collect(
-            u.select(out_name).distinct(), self.max_result_rows
+            pts.select(out_name).distinct(), self.max_result_rows
         )
         vals = sorted(r[0] for r in rows if r[0] is not None and r[0] != "")
         return prom_labels(vals)
 
-    def _match_rows(self, sel_str, start_us, end_us, only=None) -> bool:
+    def _series_points(
+        self,
+        match: "list[str] | None",
+        start_us: "int | None" = None,
+        end_us: "int | None" = None,
+    ) -> "DataFrame":
+        """The points of the series the ``match[]`` selectors pick, as
+        (sanitized labels…, ``__name__``, ts_us), within ``[start_us,
+        end_us]``: each selector's ``_selector_points`` minus its NULL
+        samples (a NULL is "this row carries no point of this metric"
+        in sparse multi-metric frames).  Without ``match[]`` (which
+        Prometheus requires) every stored row, without ``__name__``."""
+        from functools import reduce
+
         from pyspark.sql import functions as F
 
-        from .promql.compiler import _selector_points
+        from .promql import ast
+        from .promql.compiler import _sanitized_label_cols, _selector_points
         from .promql.parser import parse as parse_promql
 
-        sel = parse_promql(sel_str)
-        if only is not None and sel.name not in (None, only):
-            return False
-        if only is not None and sel.name is None:
-            # name-less match[] (e.g. {env="prod"}): count only the
-            # candidate metric's points, not every metric's — else any
-            # matching series anywhere certifies all names.
-            import dataclasses
-
-            sel = dataclasses.replace(sel, name=only)
-        pts = _selector_points(sel, self.source)
-        # a NULL sample is "this row carries no point of this metric"
-        # (sparse multi-metric frames) — it must not certify a match
-        pts = pts.filter(F.col("sample").isNotNull())
+        frames = []
+        for sel_str in match or []:
+            sel = parse_promql(sel_str)
+            if not isinstance(sel, ast.VectorSelector):
+                raise ValueError(f"match[] {sel_str!r} is not a series selector")
+            pts = _selector_points(sel, self.source)
+            if sel.name is not None:
+                pts = pts.withColumn("__name__", F.lit(sel.name))
+            frames.append(pts.filter(F.col("sample").isNotNull()).drop("sample"))
+        if not frames:
+            frames.append(
+                self.source.df.select(
+                    *_sanitized_label_cols(self.source),
+                    F.col(self.source.ts_col).alias("ts_us"),
+                )
+            )
+        u = reduce(DataFrame.unionByName, frames)
         if start_us is not None:
-            pts = pts.filter(F.col("ts_us") >= start_us)
+            u = u.filter(F.col("ts_us") >= start_us)
         if end_us is not None:
-            pts = pts.filter(F.col("ts_us") <= end_us)
-        return pts.limit(1).count() > 0
+            u = u.filter(F.col("ts_us") <= end_us)
+        return u
 
     def query_exemplars(self, q: str, start_us: int, end_us: int) -> dict:
         """GET /api/v1/query_exemplars (promhandler.go:392-460).
@@ -722,6 +682,7 @@ class PromQLEngine:
         from pyspark.sql import functions as F
 
         from .promql import ast
+        from .promql.compiler import filter_matchers
         from .promql.parser import parse as parse_promql
 
         def _find_selector(node):
@@ -746,16 +707,7 @@ class PromQLEngine:
             c for c in df.columns if c not in ("ts_us", "value", "trace_id")
         ]
         if sel is not None:
-            for m in sel.matchers:
-                c = F.col(m.name) if m.name in label_cols else F.lit("")
-                if m.op == "=":
-                    df = df.filter(c == m.value)
-                elif m.op == "!=":
-                    df = df.filter(c != m.value)
-                elif m.op == "=~":
-                    df = df.filter(anchored_rlike(c, m.value))
-                else:
-                    df = df.filter(~anchored_rlike(c, m.value))
+            df = filter_matchers(df, sel.matchers, label_cols)
         from collections import defaultdict
 
         series: dict[tuple, list] = defaultdict(list)
@@ -787,30 +739,10 @@ class PromQLEngine:
         return prom_labels([key_to_label(l) for l in self.source.label_cols])
 
     def series(self, q: str | None = None, limit: int | None = None) -> list[dict]:
-        from pyspark.sql import functions as F
-
-        df = self.source.df
-        if q:
-            # match[] selector filters the series set
-            # (promhandler.go:505-571 querySeries)
-            from .promql.parser import parse as parse_promql
-
-            sel = parse_promql(q)
-            for m in getattr(sel, "matchers", []):
-                c = (
-                    F.col(m.name)
-                    if m.name in self.source.label_cols
-                    else F.lit("")
-                )
-                df = df.filter(
-                    {
-                        "=": c == m.value,
-                        "!=": c != m.value,
-                        "=~": anchored_rlike(c, m.value),
-                        "!~": ~anchored_rlike(c, m.value),
-                    }[m.op]
-                )
-        df = df.select(*self.source.label_cols).distinct()
+        """GET /api/v1/series (promhandler.go:505-571 querySeries):
+        distinct label sets of the series the ``match[]`` selector
+        ``q`` picks, under sanitized names and with ``__name__``."""
+        df = self._series_points([q] if q else None).drop("ts_us").distinct()
         if limit is not None:
             df = df.limit(limit)
         return [
@@ -930,15 +862,17 @@ class TraceQLEngine:
     def search_frame(self, q: str, limit: int | None = 20):
         """The DataFrame under GET /api/search: parse → compile →
         per-trace assembly, one row per matched trace (trace_id,
-        root_name, trace_duration_us, start_us).  ``limit=None`` skips
-        the top-k (export/offline paths; the HTTP facade always
-        bounds).  Over a span store written with ingest-time coords
+        trace_duration_us, start_us, root_name, root_service).
+        ``limit=None`` skips the top-k (export/offline paths; the HTTP
+        facade always bounds).  Over a span store written with ingest-time coords
         (``write_bucketed_spans(with_coords=True)``), a structural
         query plans with ZERO Python stages and ZERO Exchange — the
         compile routes ``>>``/``<<`` to the stored range semi-join and
         every later key (semi-join, groupBy) is the bucketing key
         (plan-asserted in tests/test_plans.py)."""
         from pyspark.sql import functions as F
+
+        from .traceql.compiler import service_name_col
 
         matched = compile_traceql(q, self.source)
         # assemble the FULL trace for every matched trace id
@@ -952,17 +886,23 @@ class TraceQLEngine:
         # the root span is the span WITHOUT a parent (min start_us as
         # the tie-break for broken traces), not the min span id
         root_rank = F.when(F.col(self.source.parent_col).isNull(), 0).otherwise(1)
+        svc = service_name_col(self.source)
         traces = (
             spans.groupBy(self.source.trace_col)
             .agg(
                 F.min_by(
-                    F.col(self.source.name_col),
+                    F.struct(
+                        F.col(self.source.name_col).alias("root_name"),
+                        (
+                            F.col(svc) if svc else F.lit(None).cast("string")
+                        ).alias("root_service"),
+                    ),
                     F.struct(
                         root_rank.alias("r"),
                         F.col(self.source.start_col).alias("s"),
                         F.col(self.source.span_col).alias("i"),
                     ),
-                ).alias("root_name"),
+                ).alias("root"),
                 (
                     F.max(
                         F.col(self.source.start_col)
@@ -972,6 +912,8 @@ class TraceQLEngine:
                 ).alias("trace_duration_us"),
                 F.min(self.source.start_col).alias("start_us"),
             )
+            .select("*", "root.*")
+            .drop("root")
         )
         if limit is not None:
             traces = traces.orderBy(F.col("start_us").desc()).limit(limit)

@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import anchored_rlike
+from ..functions import anchored_rlike, label_match
 from ..functions.parsers import (
     decolorize,
     ip_in_cidr,
@@ -280,13 +280,7 @@ def _matcher_pred(env: _Env, m: ast.LabelMatcher) -> Column:
                 | anchored_rlike(F.initcap(lower), m.value)
             )
             return hit if m.op == "=~" else ~hit
-    if m.op == "=":
-        return c == value
-    if m.op == "!=":
-        return c != value
-    if m.op == "=~":
-        return anchored_rlike(c, value)
-    return ~anchored_rlike(c, value)
+    return label_match(c, m.op, value)
 
 
 def _line_filter_pred(env: _Env, f: ast.LineFilter) -> Column:
@@ -329,15 +323,7 @@ def _label_pred(env: _Env, p: ast.LabelPredicate) -> Column:
         # (Loki label matchers; numeric/duration/bytes predicates on
         # absent labels stay NULL → row drops, also Loki behavior)
         c = F.coalesce(c, F.lit(""))
-        if p.op in ("=", "=="):
-            return c == p.value
-        if p.op == "!=":
-            return c != p.value
-        if p.op == "=~":
-            return anchored_rlike(c, p.value)
-        if p.op == "!~":
-            return ~anchored_rlike(c, p.value)
-        raise SyntaxError(f"LogQL: bad string op {p.op}")
+        return label_match(c, "=" if p.op == "==" else p.op, p.value)
     if p.vtype == "ip":
         if "/" in p.value:
             pred = ip_in_cidr(c, p.value)
@@ -709,16 +695,23 @@ def _apply_stage(env: _Env, stage, rest=()) -> _Env:
     raise SyntaxError(f"LogQL: unsupported stage {stage!r}")
 
 
-def _compile_log_query(q: ast.LogQuery, source: LogSource) -> _Env:
+def select_streams(sel: ast.Selector, source: LogSource) -> _Env:
+    """The stream selector ``{…}``: the source rows its matchers
+    keep, in the label environment later pipeline stages extend.  Log
+    queries, metric queries and the series endpoint all select here."""
     env = _Env(
         df=source.df,
         labels={k: F.col(v) for k, v in source.label_cols.items()},
         body=F.col(source.body_col),
         source=source,
     )
-    preds = [_matcher_pred(env, m) for m in q.selector.matchers]
-    for p in preds:
-        env.df = env.df.filter(p)
+    for m in sel.matchers:
+        env.df = env.df.filter(_matcher_pred(env, m))
+    return env
+
+
+def _compile_log_query(q: ast.LogQuery, source: LogSource) -> _Env:
+    env = select_streams(q.selector, source)
     for i, stage in enumerate(q.stages):
         env = _apply_stage(env, stage, q.stages[i + 1 :])
     return env

@@ -104,36 +104,6 @@ def range_aggregate(
     fanned = fanout(samples, start_us, end_us, step_us, range_us, ts_col)
     grouped = fanned.groupBy(*by, "step_us")
 
-    order = [F.col(ts_col)] + ([F.col(ord_col)] if ord_col else [])
-    aggs = {
-        "count_over_time": F.count(F.lit(1)).cast("double"),
-        "rate": (F.count(F.lit(1)) / F.lit(range_s)).cast("double"),
-        "bytes_over_time": F.sum(v).cast("double"),
-        "bytes_rate": (F.sum(v) / F.lit(range_s)).cast("double"),
-        "sum_over_time": F.sum(v).cast("double"),
-        "avg_over_time": F.avg(v),
-        "min_over_time": F.min(v).cast("double"),
-        "max_over_time": F.max(v).cast("double"),
-        "stdvar_over_time": F.var_pop(v),
-        "stddev_over_time": F.stddev_pop(v),
-        "first_over_time": F.min_by(v, F.struct(*order)).cast("double"),
-        "last_over_time": F.max_by(v, F.struct(*order)).cast("double"),
-        # Prometheus experimental ts_of_* family (functions.go
-        # funcTsOfMaxOverTime/funcTsOfMinOverTime/funcTsOfLastOverTime):
-        # the timestamp (float seconds) of the max/min/last sample in
-        # the window; ties resolve to the LATEST occurrence (upstream
-        # iterates with >= / <=, so later samples win).  NaN samples
-        # sort differently in Spark (largest) than Go (skipped) — the
-        # synthetic frames carry no NaNs.
-        "ts_of_last_over_time": (F.max(F.col(ts_col)) / F.lit(1e6)).cast("double"),
-        "ts_of_max_over_time": (
-            F.max_by(F.col(ts_col), F.struct(v, F.col(ts_col))) / F.lit(1e6)
-        ).cast("double"),
-        "ts_of_min_over_time": (
-            F.max_by(F.col(ts_col), F.struct((v * F.lit(-1.0)).alias("nv"), F.col(ts_col)))
-            / F.lit(1e6)
-        ).cast("double"),
-    }
     if op == "quantile_over_time":
         assert q is not None
         if q < 0 or q > 1:
@@ -142,8 +112,46 @@ def range_aggregate(
         else:
             agg = F.percentile(v, F.lit(q))
     else:
-        agg = aggs[op]
+        agg = RANGE_AGGS[op](v, ts_col, ord_col, range_s)
     return grouped.agg(agg.alias("value"))
+
+
+def _order(ts_col: str, ord_col: str | None):
+    """first/last order: the timestamp, then the unique tiebreaker."""
+    return F.struct(ts_col, *([ord_col] if ord_col else []))
+
+
+# op → (sample, ts column, tiebreak column, range seconds) → aggregate;
+# a table of builders, so a compile constructs only the one it uses
+RANGE_AGGS = {
+    "count_over_time": lambda v, ts, o, r: F.count(F.lit(1)).cast("double"),
+    "rate": lambda v, ts, o, r: (F.count(F.lit(1)) / F.lit(r)).cast("double"),
+    "bytes_over_time": lambda v, ts, o, r: F.sum(v).cast("double"),
+    "bytes_rate": lambda v, ts, o, r: (F.sum(v) / F.lit(r)).cast("double"),
+    "sum_over_time": lambda v, ts, o, r: F.sum(v).cast("double"),
+    "avg_over_time": lambda v, ts, o, r: F.avg(v),
+    "min_over_time": lambda v, ts, o, r: F.min(v).cast("double"),
+    "max_over_time": lambda v, ts, o, r: F.max(v).cast("double"),
+    "stdvar_over_time": lambda v, ts, o, r: F.var_pop(v),
+    "stddev_over_time": lambda v, ts, o, r: F.stddev_pop(v),
+    "first_over_time": lambda v, ts, o, r: F.min_by(v, _order(ts, o)).cast("double"),
+    "last_over_time": lambda v, ts, o, r: F.max_by(v, _order(ts, o)).cast("double"),
+    # Prometheus experimental ts_of_* family (functions.go
+    # funcTsOfMaxOverTime/funcTsOfMinOverTime/funcTsOfLastOverTime):
+    # the timestamp (float seconds) of the max/min/last sample in the
+    # window; ties resolve to the LATEST occurrence (upstream iterates
+    # with >= / <=, so later samples win).  NaN samples sort
+    # differently in Spark (largest) than Go (skipped) — the synthetic
+    # frames carry no NaNs.
+    "ts_of_last_over_time": lambda v, ts, o, r: (F.max(ts) / F.lit(1e6)).cast("double"),
+    "ts_of_max_over_time": lambda v, ts, o, r: (
+        F.max_by(ts, F.struct(v, F.col(ts))) / F.lit(1e6)
+    ).cast("double"),
+    "ts_of_min_over_time": lambda v, ts, o, r: (
+        F.max_by(ts, F.struct((v * F.lit(-1.0)).alias("nv"), F.col(ts)))
+        / F.lit(1e6)
+    ).cast("double"),
+}
 
 
 # fan-out factor above which range_aggregate re-routes decomposable

@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import anchored_rlike
+from ..functions import label_match
 from ..operators.binop import scalar_binop, vector_binop
 from ..operators.range_agg import range_aggregate
 from ..operators.rate import rate_family
@@ -185,6 +185,22 @@ def _out_label_names(source: MetricSource) -> list[str]:
     return [key_to_label(l) for l in source.label_cols]
 
 
+def filter_matchers(df: DataFrame, matchers, label_cols) -> DataFrame:
+    """Keep the rows of ``df`` every label matcher accepts.  A matcher
+    on a label no series carries compares against the empty string
+    (Prometheus: absent label == "").  Resolution is sanitization-aware:
+    an underscore or U__-hex spelling finds a dotted OTel attr column
+    (otelstorage/attrs.go:11-41, chstorage/querier_metrics.go:145-163)
+    — compile-time only, label names are query literals."""
+    from ..functions.otel_labels import resolve_label_name
+
+    for m in matchers:
+        resolved = resolve_label_name(m.name, label_cols)
+        c = F.col(f"`{resolved}`") if resolved is not None else F.lit("")
+        df = df.filter(label_match(c, m.op, m.value))
+    return df
+
+
 def _selector_points(sel: ast.VectorSelector, source: MetricSource) -> DataFrame:
     if sel.name is None:
         # name-less selector ({__name__=~"..."} / {label="..."}):
@@ -238,26 +254,7 @@ def _selector_points(sel: ast.VectorSelector, source: MetricSource) -> DataFrame
             F.col(source.ts_col).alias("ts_us"),
             F.lit(0.0).cast("double").alias("sample"),
         )
-    from ..functions.otel_labels import resolve_label_name
-
-    df = source.df
-    for m in sel.matchers:
-        # a matcher on a label no series carries compares against the
-        # empty string (Prometheus: absent label == "").  Resolution is
-        # sanitization-aware: an underscore or U__-hex spelling finds a
-        # dotted OTel attr column (otelstorage/attrs.go:11-41,
-        # chstorage/querier_metrics.go:145-163) — compile-time only,
-        # label names are query literals.
-        resolved = resolve_label_name(m.name, source.label_cols)
-        c = F.col(f"`{resolved}`") if resolved is not None else F.lit("")
-        if m.op == "=":
-            df = df.filter(c == m.value)
-        elif m.op == "!=":
-            df = df.filter(c != m.value)
-        elif m.op == "=~":
-            df = df.filter(anchored_rlike(c, m.value))
-        else:
-            df = df.filter(~anchored_rlike(c, m.value))
+    df = filter_matchers(source.df, sel.matchers, source.label_cols)
     vcol = source.metrics[sel.name]
     ts = F.col(source.ts_col)
     if sel.offset_us:
@@ -289,7 +286,7 @@ def _instant_vector(
             end_us=at_us,
             step_us=params.step_us,
             range_us=params.lookback_us,
-            by=[c for c in pts.columns if c not in ("ts_us", "sample")],
+            by=_point_labels(pts),
         ).drop("step_us")
         from .compiler import PromParams as _PP  # noqa: F401
         from ..operators.stepfanout import step_spine
@@ -305,7 +302,7 @@ def _instant_vector(
         end_us=params.end_us,
         step_us=params.step_us,
         range_us=params.lookback_us,
-        by=[c for c in pts.columns if c not in ("ts_us", "sample")],
+        by=_point_labels(pts),
     )
 
 
@@ -324,6 +321,11 @@ def compile_promql(
 
 def _labels_of(df: DataFrame) -> list[str]:
     return [c for c in df.columns if c not in ("step_us", "value")]
+
+
+def _point_labels(pts: DataFrame) -> list[str]:
+    """Series labels of a points frame (``_selector_points`` shape)."""
+    return [c for c in pts.columns if c not in ("ts_us", "sample")]
 
 
 def _resolve_at_pin(at_us, params: PromParams) -> "PromParams | None":
@@ -642,7 +644,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         else:
             pts = _selector_points(sel, source)
         kw = dict(
-            series=[c for c in pts.columns if c not in ("ts_us", "sample")],
+            series=_point_labels(pts),
             value_col="sample",
             start_us=eff.start_us,
             end_us=eff.end_us,
@@ -725,11 +727,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
                 samples, eff.start_us, eff.end_us, eff.step_us, rng
             )
             out = (
-                fanned.select(
-                    *[c for c in samples.columns
-                      if c not in ("ts_us", "sample")],
-                    "step_us",
-                )
+                fanned.select(*_point_labels(samples), "step_us")
                 .distinct()
                 .withColumn("value", F.lit(1.0))
             )
@@ -743,7 +741,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
             end_us=eff.end_us,
             step_us=eff.step_us,
             range_us=rng,
-            by=[c for c in samples.columns if c not in ("ts_us", "sample")],
+            by=_point_labels(samples),
             q=q,
             spark=spark,
         )
@@ -877,7 +875,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
                 eff.step_us,
                 params.lookback_us,
             )
-            labels = [c for c in pts.columns if c not in ("ts_us", "sample")]
+            labels = _point_labels(pts)
             # the wire value is the RAW sample timestamp — the points
             # frame shifts ts by the selector offset for window math,
             # so undo it here (funcTimestamp reads the unshifted T)
@@ -979,7 +977,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         fanned = fanout(
             pts, params.start_us, params.end_us, params.step_us, sel.range_us
         )
-        keys = [*source.label_cols, "step_us"]
+        keys = [*_point_labels(pts), "step_us"]
         med = fanned.groupBy(*keys).agg(
             F.percentile("sample", F.lit(0.5)).alias("__med")
         )
@@ -1008,7 +1006,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         fanned = fanout(
             pts, params.start_us, params.end_us, params.step_us, sel.range_us
         )
-        g = fanned.groupBy(*source.label_cols, "step_us").agg(
+        g = fanned.groupBy(*_point_labels(pts), "step_us").agg(
             F.transform(
                 F.array_sort(
                     F.collect_list(F.struct(F.col("ts_us"), F.col("sample")))
@@ -1202,21 +1200,9 @@ def _compile_hist_exp_state(
             "supported (merge states at ingest instead)"
         )
     name = fc.name
-    df = source.exp_states[sel.name]
-    for m in sel.matchers:
-        c = (
-            F.col(m.name)
-            if m.name in source.exp_state_labels
-            else F.lit("")
-        )
-        if m.op == "=":
-            df = df.filter(c == m.value)
-        elif m.op == "!=":
-            df = df.filter(c != m.value)
-        elif m.op == "=~":
-            df = df.filter(anchored_rlike(c, m.value))
-        else:
-            df = df.filter(~anchored_rlike(c, m.value))
+    df = filter_matchers(
+        source.exp_states[sel.name], sel.matchers, source.exp_state_labels
+    )
     ts = F.col("ts_us")
     if sel.offset_us:
         ts = ts + F.lit(sel.offset_us)

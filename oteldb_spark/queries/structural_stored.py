@@ -289,8 +289,8 @@ def tql_parsed_stored_ancestor(spark, sf_dir):
 
 # the FULL HTTP-shaped production path over the materialized store:
 # GET /api/search body → TraceQLEngine.search_frame → parse → compile
-# → STORED-coords structural route → per-trace assembly (root name by
-# Tempo's root-rank, trace duration, start) — every stage keyed on the
+# → STORED-coords structural route → per-trace assembly (root name and
+# service by Tempo's root-rank, trace duration, start) — every stage keyed on the
 # bucketing key, so the whole facade plans zero-Python / zero-Exchange
 # (asserted in tests/test_plans.py::test_search_facade_stored_plan).
 # limit=None so the oracle comparison is order-insensitive and
@@ -316,7 +316,7 @@ matched AS (
   WHERE s.duration_us > 100000
 ),
 ranked AS (
-  SELECT s.trace_id, s.name,
+  SELECT s.trace_id, s.name, s.service,
          row_number() OVER (
            PARTITION BY s.trace_id
            ORDER BY (CASE WHEN s.parent_span_id IS NULL THEN 0 ELSE 1 END),
@@ -331,7 +331,8 @@ agg AS (
   FROM spans s JOIN matched USING (trace_id)
   GROUP BY s.trace_id
 )
-SELECT a.trace_id, r.name AS root_name, a.trace_duration_us, a.start_us
+SELECT a.trace_id, r.name AS root_name, r.service AS root_service,
+       a.trace_duration_us, a.start_us
 FROM agg a JOIN ranked r ON a.trace_id = r.trace_id AND r.rn = 1""",
 )
 def traceql_search_stored_facade(spark, sf_dir):

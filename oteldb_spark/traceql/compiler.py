@@ -239,6 +239,12 @@ def _query_attrs(query) -> list:
     return attrs
 
 
+def service_name_col(source: SpanSource) -> "str | None":
+    """The column holding a span's ``service.name`` (``None`` when the
+    source has none) — what ``rootServiceName`` reads on the root."""
+    return source.attr_cols.get("service.name") or source.attr_cols.get("service")
+
+
 def _with_trace_columns(source: SpanSource, query) -> SpanSource:
     """Materialize trace-context intrinsics (rootName,
     rootServiceName, traceDuration, childCount — attribute.go:52-65)
@@ -268,9 +274,7 @@ def _with_trace_columns(source: SpanSource, query) -> SpanSource:
                 )
             )
         if "rootServiceName" in names:
-            svc = source.attr_cols.get("service.name") or source.attr_cols.get(
-                "service"
-            )
+            svc = service_name_col(source)
             if svc is None:
                 raise KeyError(
                     "TraceQL: rootServiceName needs a service.name attr column"

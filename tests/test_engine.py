@@ -357,3 +357,92 @@ def test_promql_instant_label_values_exemplars(spark):
         s["seriesLabels"]["mtype"] == "error" for s in res["data"]
     )
     assert all(e["labels"]["trace_id"] for s in res["data"] for e in s["exemplars"])
+
+
+def _sparse_metrics(spark, pod_col="k8s.pod"):
+    """Two metrics in one sparse frame (a NULL sample is "no point of
+    this metric on this row"), by default with a dotted OTel label
+    column."""
+    df = spark.createDataFrame(
+        [
+            ("a", "p1", 1_000_000, 1.0, None),
+            ("b", "p2", 2_000_000, None, 5.0),
+            ("c", "p3", 3_000_000, 2.0, 7.0),
+        ],
+        f"host string, `{pod_col}` string, ts_us long, up double, mem double",
+    )
+    return PromQLEngine(
+        MetricSource(
+            df=df,
+            metrics={"up": "up", "mem": "mem"},
+            label_cols=["host", pod_col],
+        )
+    )
+
+
+def test_prom_series_unknown_metric_is_empty(spark):
+    assert _sparse_metrics(spark, "pod").series("nope") == []
+
+
+def test_prom_series_skips_null_samples(spark):
+    got = _sparse_metrics(spark, "pod").series("up")
+    assert sorted(s["host"] for s in got) == ["a", "c"]
+    assert all(s["__name__"] == "up" for s in got)
+
+
+def test_prom_series_dotted_label_sanitized(spark):
+    """series() names a dotted label column as query_range does."""
+    eng = _sparse_metrics(spark)
+    got = eng.series('{k8s_pod="p2"}')
+    assert got == [{"host": "b", "k8s_pod": "p2", "__name__": "mem"}]
+    matrix = eng.query_range('mem{k8s_pod="p2"}', 0, 4_000_000, 1_000_000)
+    assert [s["metric"] for s in matrix["data"]["result"]] == [
+        {"host": "b", "k8s_pod": "p2"}
+    ]
+    assert {s["k8s_pod"] for s in eng.series()} == {"p1", "p2", "p3"}
+
+
+def test_prom_label_values_match_skips_null_samples(spark):
+    eng = _sparse_metrics(spark)
+    assert eng.label_values("host", match=["mem"])["data"] == ["b", "c"]
+    assert eng.label_values("k8s_pod", match=["up"])["data"] == ["p1", "p3"]
+
+
+def test_loki_series_severity_agrees_with_query_range(spark):
+    """series() matches a severity label the way query_range does
+    (case-folded), so both find the same streams."""
+    eng = LogQLEngine(
+        LogSource(
+            df=logs_frame(spark, SF),
+            label_cols={"service": "service", "env": "env", "level": "level"},
+            severity_labels=frozenset({"level"}),
+        )
+    )
+    sel = '{level="error", env="prod"}'
+    streams = eng.query_range(sel, START, END, STEP)["data"]["result"]
+    want = sorted(tuple(sorted(s["stream"].items())) for s in streams)
+    got = sorted(
+        tuple(sorted(s.items())) for s in eng.series(sel, start_us=START)
+    )
+    assert want and got == want
+
+
+def test_tempo_search_root_service_name(spark):
+    """rootServiceName is the root span's service.name."""
+    df = spark.createDataFrame(
+        [
+            (1, 10, None, "checkout", "GET /cart", 1_000_000, 5_000),
+            (1, 11, 10, "payments", "charge", 1_001_000, 2_000),
+            (2, 20, None, "search", "GET /q", 2_000_000, 9_000),
+        ],
+        "trace_id long, span_id long, parent_span_id long, service string,"
+        " name string, start_us long, duration_us long",
+    )
+    eng = TraceQLEngine(
+        SpanSource(df=df, attr_cols={"service.name": "service"})
+    )
+    got = {
+        t["rootTraceName"]: t["rootServiceName"]
+        for t in eng.search("{ }", limit=10)["traces"]
+    }
+    assert got == {"GET /cart": "checkout", "GET /q": "search"}

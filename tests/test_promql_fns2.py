@@ -288,3 +288,45 @@ def test_info_unmatched_passthrough(spark):
     rows = {r.instance: (r.value, r.region) for r in out.collect()}
     assert rows["h1"] == (5.0, "west")
     assert rows["h2"] == (7.0, None)
+
+
+def test_mad_and_smoothing_key_on_the_points_frame(spark):
+    """mad_over_time and double_exponential_smoothing group by the
+    series labels of the points frame, like max_over_time: a dotted
+    label column surfaces under its sanitized name, and a name-less
+    selector keeps one series per metric."""
+    df = spark.createDataFrame(
+        [
+            ("p1", ts, float(ts // 1_000_000), 10.0 * (ts // 1_000_000))
+            for ts in (1_000_000, 2_000_000, 3_000_000, 4_000_000)
+        ],
+        "`k8s.pod` string, ts_us long, up double, mem double",
+    )
+    src = MetricSource(
+        df=df, metrics={"up": "up", "mem": "mem"}, label_cols=["k8s.pod"]
+    )
+    p = PromParams(4_000_000, 4_000_000, 1_000_000)
+
+    def rows(q):
+        return sorted(
+            (r.asDict() for r in compile_promql(q, src, p, spark).collect()),
+            key=lambda r: r.get("__name__", ""),
+        )
+
+    want = rows("max_over_time(up[10s])")
+    assert [set(r) for r in want] == [{"k8s_pod", "step_us", "value"}]
+    for q in (
+        "mad_over_time(up[10s])",
+        "double_exponential_smoothing(up[10s], 0.5, 0.5)",
+    ):
+        assert [set(r) for r in rows(q)] == [set(want[0])], q
+    # name-less: one series per metric, not one merged window
+    mad = rows('mad_over_time({__name__=~"up|mem"}[10s])')
+    assert [(r["__name__"], r["value"]) for r in mad] == [
+        ("mem", 10.0),
+        ("up", 1.0),
+    ]
+    des = rows(
+        'double_exponential_smoothing({__name__=~"up|mem"}[10s], 0.5, 0.5)'
+    )
+    assert [r["__name__"] for r in des] == ["mem", "up"]
