@@ -52,6 +52,13 @@ def _direction_limit(df, direction: str, limit: "int | None"):
     return df.orderBy(order).limit(limit)
 
 
+def _labels(df, is_metric: bool = True) -> list[str]:
+    """The label columns of a metric frame (labels…, step_us, value)
+    or of a log frame (labels…, ts_us, body)."""
+    drop = ("step_us", "value") if is_metric else ("ts_us", "body")
+    return [c for c in df.columns if c not in drop]
+
+
 @dataclass
 class LogQLEngine:
     source: LogSource
@@ -90,57 +97,61 @@ class LogQLEngine:
         (backward default, like the HTTP layer —
         lokihandler/params.go:58-67) picks WHICH ``limit`` entries
         survive: newest-first or oldest-first."""
-        df, _ = self._query_range_classified(
-            q, start_us, end_us, step_us, limit, now_us, direction
+        df, _ = self._classified(
+            q, start_us, end_us, step_us, limit, direction, now_us
         )
         return df
 
-    def _query_range_classified(
+    def _classified(
         self,
         q: str,
         start_us: int,
         end_us: int,
         step_us: int,
-        limit: int | None = None,
+        limit: int | None,
+        direction: str,
         now_us: int | None = None,
-        direction: str = "backward",
+        instant: bool = False,
     ):
-        """``(frame, is_metric)`` — the classification comes from the
-        parsed AST, not from sniffing the output columns, so a log
-        stream whose labels include one literally named ``step_us``
-        can never be mis-serialized as a matrix (advisor r11)."""
-        # classify metric-vs-log from the parsed AST (a LogQuery root
-        # is a log listing; anything else is a metric expression) so
-        # the cache path compiles exactly once per computed range —
-        # instead of compiling a throwaway full-range plan just to
-        # sniff its columns and then recompiling through the cache
+        """``(frame, is_metric)``: parse → metric/log classification →
+        compile → direction + limit.  The classification comes from
+        the parsed AST (a LogQuery root is a log listing), not from
+        sniffing the output columns, so a log stream whose labels
+        include one literally named ``step_us`` can never be
+        mis-serialized as a matrix, and a cached range compiles once.
+        A range metric query goes through the result cache.  An
+        ``instant`` query evaluates at ``end_us``: a metric query on
+        one grid step; a log query over the lookback window ending
+        there — the reference rewrites Start to ``ts +
+        LookbackDuration`` (a NEGATIVE duration, default -30s) before
+        eval (engine_log_query.go:46-49); here the equivalent ``[ts −
+        instant_log_lookback_us, ts)`` window, with the same
+        end-exclusive convention as the range contract."""
         from .logql.ast import LogQuery
         from .logql.parser import parse as parse_logql
 
         expr = parse_logql(q) if isinstance(q, str) else q
         is_metric = not isinstance(expr, LogQuery)
-        params = EvalParams(start_us, end_us, step_us)
-        if is_metric and self.result_cache is not None:
+        if instant:
+            start_us = end_us
+            if not is_metric:
+                start_us -= self.instant_log_lookback_us
 
-            def _compile(s_us: int, e_us: int):
-                return compile_logql(
-                    expr, self.source, EvalParams(s_us, e_us, step_us), self._spark()
-                )
-
-            df = self.result_cache.query_range(
-                self._spark(),
-                f"logql|{q}",
-                start_us,
-                end_us,
-                step_us,
-                _compile,
-                now_us,
+        def _compile(s_us: int, e_us: int):
+            return compile_logql(
+                expr, self.source, EvalParams(s_us, e_us, step_us), self._spark()
             )
-        else:
-            df = compile_logql(expr, self.source, params, self._spark())
+
         if not is_metric:
-            df = _direction_limit(df, direction, limit)
-        return df, is_metric
+            df = _direction_limit(_compile(start_us, end_us), direction, limit)
+            return df, False
+        if instant or self.result_cache is None:
+            return _compile(start_us, end_us), True
+        df = self.result_cache.query_range(
+            self._spark(), f"logql|{q}", start_us, end_us, step_us, _compile,
+            now_us,
+        )
+        return df, True
 
     def query_range(
         self,
@@ -152,16 +163,14 @@ class LogQLEngine:
         now_us: int | None = None,
         direction: str = "backward",
     ) -> dict:
-        df, is_metric = self._query_range_classified(
-            q, start_us, end_us, step_us, limit, now_us, direction
+        df, is_metric = self._classified(
+            q, start_us, end_us, step_us, limit, direction, now_us
         )
         if is_metric:  # metric query → matrix
-            labels = [c for c in df.columns if c not in ("step_us", "value")]
-            return loki_matrix(df, labels, max_rows=self.max_result_rows)
-        labels = [
-            c for c in df.columns if c not in ("ts_us", "body")
-        ]  # log query → streams
-        return loki_streams(df, labels, max_rows=self.max_result_rows)
+            return loki_matrix(df, _labels(df), max_rows=self.max_result_rows)
+        return loki_streams(
+            df, _labels(df, is_metric=False), max_rows=self.max_result_rows
+        )
 
     def query_instant_frame(
         self,
@@ -174,38 +183,10 @@ class LogQLEngine:
         serialization: a metric query yields the one-step vector rows
         (labels…, step_us, value); a log query the limited stream
         window (labels…, ts_us, body)."""
-        df, _ = self._query_instant_classified(q, ts_us, limit, direction)
+        df, _ = self._classified(
+            q, ts_us, ts_us, 1, limit, direction, instant=True
+        )
         return df
-
-    def _query_instant_classified(
-        self,
-        q: str,
-        ts_us: int,
-        limit: int = 100,
-        direction: str = "backward",
-    ):
-        """``(frame, is_metric)`` with AST-derived classification, like
-        :meth:`_query_range_classified`.  A LOG query evaluates the
-        lookback window ending at ``ts_us`` — the reference rewrites
-        Start to ``ts + LookbackDuration`` (a NEGATIVE duration,
-        default -30s) before eval (engine_log_query.go:46-49); here the
-        equivalent ``[ts − instant_log_lookback_us, ts)`` window, with
-        the same end-exclusive convention as the range contract."""
-        from .logql.ast import LogQuery
-        from .logql.parser import parse as parse_logql
-
-        expr = parse_logql(q) if isinstance(q, str) else q
-        is_metric = not isinstance(expr, LogQuery)
-        if is_metric:
-            params = EvalParams(ts_us, ts_us, 1)  # one grid step at ts
-        else:
-            params = EvalParams(
-                ts_us - self.instant_log_lookback_us, ts_us, 1
-            )
-        df = compile_logql(expr, self.source, params, self._spark())
-        if not is_metric:
-            df = _direction_limit(df, direction, limit)
-        return df, is_metric
 
     def query_instant(
         self,
@@ -219,16 +200,16 @@ class LogQLEngine:
         vector, log queries the lookback-window stream listing)."""
         from .api.serializers import prom_vector
 
-        df, is_metric = self._query_instant_classified(
-            q, ts_us, limit, direction
+        df, is_metric = self._classified(
+            q, ts_us, ts_us, 1, limit, direction, instant=True
         )
         if is_metric:
-            labels = [c for c in df.columns if c not in ("step_us", "value")]
             return prom_vector(
-                df, labels, ts_us / 1e6, max_rows=self.max_result_rows
+                df, _labels(df), ts_us / 1e6, max_rows=self.max_result_rows
             )
-        labels = [c for c in df.columns if c not in ("ts_us", "body")]
-        return loki_streams(df, labels, max_rows=self.max_result_rows)
+        return loki_streams(
+            df, _labels(df, is_metric=False), max_rows=self.max_result_rows
+        )
 
     def drilldown_limits(self, volume_enabled: bool = True) -> dict:
         """GET /loki/api/v1/drilldown-limits (lokihandler.go:214-228)."""
@@ -344,9 +325,8 @@ class LogQLEngine:
         from .api.serializers import prom_vector
 
         df = self.volume_frame(query, start_us, end_us, 0, target_labels)
-        labels = [c for c in df.columns if c not in ("step_us", "value")]
         return prom_vector(
-            df, labels, end_us / 1e6, max_rows=self.max_result_rows
+            df, _labels(df), end_us / 1e6, max_rows=self.max_result_rows
         )
 
     def query_volume_range(
@@ -364,8 +344,7 @@ class LogQLEngine:
         Start=End), returning a one-point matrix per series.
         """
         df = self.volume_frame(query, start_us, end_us, step_us, target_labels)
-        labels = [c for c in df.columns if c not in ("step_us", "value")]
-        return loki_matrix(df, labels, max_rows=self.max_result_rows)
+        return loki_matrix(df, _labels(df), max_rows=self.max_result_rows)
 
     def detected_labels(
         self, query: str, start_us: int, end_us: int
@@ -575,8 +554,7 @@ class PromQLEngine:
         now_us: int | None = None,
     ) -> dict:
         df = self.query_range_frame(q, start_us, end_us, step_us, now_us)
-        labels = [c for c in df.columns if c not in ("step_us", "value")]
-        return prom_matrix(df, labels, max_rows=self.max_result_rows)
+        return prom_matrix(df, _labels(df), max_rows=self.max_result_rows)
 
     def query_instant_frame(self, q: str, ts_us: int) -> "DataFrame":
         """The DataFrame under GET /api/v1/query, one step before
@@ -591,8 +569,7 @@ class PromQLEngine:
         from .api.serializers import prom_vector
 
         df = self.query_instant_frame(q, ts_us)
-        labels = [c for c in df.columns if c not in ("step_us", "value")]
-        return prom_vector(df, labels, ts_us / 1e6, max_rows=self.max_result_rows)
+        return prom_vector(df, _labels(df), ts_us / 1e6, max_rows=self.max_result_rows)
 
     def label_values(
         self,
@@ -635,10 +612,9 @@ class PromQLEngine:
     ) -> "DataFrame":
         """The points of the series the ``match[]`` selectors pick, as
         (sanitized labels…, ``__name__``, ts_us), within ``[start_us,
-        end_us]``: each selector's ``_selector_points`` minus its NULL
-        samples (a NULL is "this row carries no point of this metric"
-        in sparse multi-metric frames).  Without ``match[]`` (which
-        Prometheus requires) every stored row, without ``__name__``."""
+        end_us]``: each selector's ``_selector_points``.  Without
+        ``match[]`` (which Prometheus requires) every stored row,
+        without ``__name__``."""
         from functools import reduce
 
         from pyspark.sql import functions as F
@@ -655,7 +631,7 @@ class PromQLEngine:
             pts = _selector_points(sel, self.source)
             if sel.name is not None:
                 pts = pts.withColumn("__name__", F.lit(sel.name))
-            frames.append(pts.filter(F.col("sample").isNotNull()).drop("sample"))
+            frames.append(pts.drop("sample"))
         if not frames:
             frames.append(
                 self.source.df.select(
@@ -1021,5 +997,4 @@ class TraceQLEngine:
             step_us=step_us,
             range_us=range_us if range_us is not None else step_us,
         )
-        labels = [c for c in df.columns if c not in ("step_us", "value")]
-        return prom_matrix(df, labels, max_rows=DEFAULT_MAX_RESULT_ROWS)
+        return prom_matrix(df, _labels(df), max_rows=DEFAULT_MAX_RESULT_ROWS)

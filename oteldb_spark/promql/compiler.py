@@ -66,22 +66,22 @@ class PromParams:
 
 
 RANGE_FUNCS = {
-    "avg_over_time": "avg_over_time",
-    "min_over_time": "min_over_time",
-    "max_over_time": "max_over_time",
-    "sum_over_time": "sum_over_time",
-    "count_over_time": "count_over_time",
-    "stddev_over_time": "stddev_over_time",
-    "stdvar_over_time": "stdvar_over_time",
-    "quantile_over_time": "quantile_over_time",
-    "last_over_time": "last_over_time",
-    "first_over_time": "first_over_time",
-    "absent_over_time": "absent_over_time",
+    "avg_over_time",
+    "min_over_time",
+    "max_over_time",
+    "sum_over_time",
+    "count_over_time",
+    "stddev_over_time",
+    "stdvar_over_time",
+    "quantile_over_time",
+    "last_over_time",
+    "first_over_time",
+    "absent_over_time",
     # experimental ts_of_* family (functions.go): timestamp of the
     # max/min/last sample per window, float seconds
-    "ts_of_last_over_time": "ts_of_last_over_time",
-    "ts_of_max_over_time": "ts_of_max_over_time",
-    "ts_of_min_over_time": "ts_of_min_over_time",
+    "ts_of_last_over_time",
+    "ts_of_max_over_time",
+    "ts_of_min_over_time",
 }
 RATE_FUNCS = {"rate", "increase", "delta", "irate", "idelta"}
 
@@ -254,56 +254,34 @@ def _selector_points(sel: ast.VectorSelector, source: MetricSource) -> DataFrame
             F.col(source.ts_col).alias("ts_us"),
             F.lit(0.0).cast("double").alias("sample"),
         )
-    df = filter_matchers(source.df, sel.matchers, source.label_cols)
+    # a NULL is "this row carries no point of this metric" in sparse
+    # multi-metric frames — not a sample
     vcol = source.metrics[sel.name]
-    ts = F.col(source.ts_col)
-    if sel.offset_us:
-        ts = ts + F.lit(sel.offset_us)
-    return df.select(
+    df = filter_matchers(source.df, sel.matchers, source.label_cols)
+    return df.filter(F.col(vcol).isNotNull()).select(
         *_sanitized_label_cols(source),
-        ts.alias("ts_us"),
+        F.col(source.ts_col).alias("ts_us"),
         F.col(vcol).alias("sample"),
     )
 
 
 def _instant_vector(
-    sel: ast.VectorSelector, source: MetricSource, params: PromParams
+    sel: ast.VectorSelector, source: MetricSource, params: PromParams, spark
 ) -> DataFrame:
     """Instant selector: most recent sample within the staleness
     lookback at each step.  With an ``@`` modifier the value is pinned
     to the fixed time and repeated across every output step."""
-    pts = _selector_points(sel, source)
-    if sel.at_us is not None:
-        at_us = sel.at_us
-        if at_us == "start":  # @ start() / @ end() sentinels
-            at_us = params.start_us
-        elif at_us == "end":
-            at_us = params.end_us
-        pinned = range_aggregate(
-            pts,
-            "last_over_time",
-            start_us=at_us,
-            end_us=at_us,
-            step_us=params.step_us,
-            range_us=params.lookback_us,
-            by=_point_labels(pts),
-        ).drop("step_us")
-        from .compiler import PromParams as _PP  # noqa: F401
-        from ..operators.stepfanout import step_spine
-
-        spine = step_spine(
-            pts.sparkSession, params.start_us, params.end_us, params.step_us
-        )
-        return pinned.crossJoin(spine)
-    return range_aggregate(
-        pts,
+    arg = _range_arg(sel, "selector", source, params, spark, instant=True)
+    out = range_aggregate(
+        arg.samples,
         "last_over_time",
-        start_us=params.start_us,
-        end_us=params.end_us,
-        step_us=params.step_us,
-        range_us=params.lookback_us,
-        by=_point_labels(pts),
+        start_us=arg.grid.start_us,
+        end_us=arg.grid.end_us,
+        step_us=arg.grid.step_us,
+        range_us=arg.range_us,
+        by=arg.labels,
     )
+    return _replicate_steps(out, arg, params)
 
 
 def compile_promql(
@@ -328,25 +306,123 @@ def _point_labels(pts: DataFrame) -> list[str]:
     return [c for c in pts.columns if c not in ("ts_us", "sample")]
 
 
-def _resolve_at_pin(at_us, params: PromParams) -> "PromParams | None":
-    """@ modifier on a range vector → single-evaluation params pinned
-    at the resolved time (None without @)."""
-    if at_us is None:
-        return None
-    if at_us == "start":
-        at_us = params.start_us
-    elif at_us == "end":
-        at_us = params.end_us
-    return PromParams(int(at_us), int(at_us), params.step_us, params.lookback_us)
+@dataclass
+class _RangeArg:
+    """A function's vector argument, resolved for window evaluation."""
+
+    samples: DataFrame  # (labels…, ts_us, sample), ts shifted by offset_us
+    range_us: int
+    grid: PromParams  # the query grid, or one step at the @ time
+    offset_us: int
+    pinned: bool
+
+    @property
+    def labels(self) -> list[str]:
+        return _point_labels(self.samples)
+
+    def fanned(self) -> DataFrame:
+        """The samples, each repeated at every grid step whose window
+        ``(t - range, t]`` holds it (adds ``step_us``)."""
+        g = self.grid
+        return fanout(
+            self.samples, g.start_us, g.end_us, g.step_us, self.range_us
+        )
 
 
-def _replicate_steps(out: DataFrame, params: PromParams, spark) -> DataFrame:
-    """Pinned single-step result → repeated across the query grid."""
+def _range_arg(
+    arg,
+    fname: str,
+    source: MetricSource,
+    params: PromParams,
+    spark,
+    *,
+    instant: bool = False,
+    points=None,
+) -> _RangeArg:
+    """Resolve ``@``, ``offset`` and subqueries once, before any
+    function sees its window — as promql/engine.go does for every
+    function (evalSubquery).  ``arg`` is a range selector ``x[r]``, a
+    selector subquery ``x[r:s]``, a subquery ``(expr)[r:s]`` or, with
+    ``instant``, an instant selector whose window is the staleness
+    lookback.  ``points(sel, source)`` builds a plain selector's
+    unshifted samples (default :func:`_selector_points`).  With ``@``
+    the grid is one step at the pinned time; :func:`_replicate_steps`
+    repeats the result across the query grid."""
+    from dataclasses import replace as _dc_replace
+
+    sub = isinstance(arg, ast.FuncCall) and arg.name == "__subquery__"
+    sel = arg if isinstance(arg, ast.VectorSelector) else None
+    if not sub and (sel is None or (sel.range_us is None and not instant)):
+        raise SyntaxError(f"PromQL: {fname}() needs a range vector")
+    at = sel.at_us if sel is not None else None
+    if at == "start":  # @ start() / @ end() sentinels
+        at = params.start_us
+    elif at == "end":
+        at = params.end_us
+    grid = params
+    if at is not None:
+        grid = PromParams(int(at), int(at), params.step_us, params.lookback_us)
+    if sub:
+        rng, offset = arg.range_us, arg.offset_us
+        samples = _subquery_samples(
+            arg.args[0], rng, arg.step_us, offset, source, grid, spark
+        )
+    elif sel.subquery_step_us is not None:
+        # selector subquery: instant evals on the subquery grid, NOT
+        # raw samples
+        rng, offset = sel.range_us, sel.offset_us
+        inner = _dc_replace(
+            sel, range_us=None, subquery_step_us=None, offset_us=0, at_us=None
+        )
+        samples = _subquery_samples(
+            inner, rng, sel.subquery_step_us, offset, source, grid, spark
+        )
+    else:
+        rng, offset = sel.range_us or params.lookback_us, sel.offset_us
+        samples = (points or _selector_points)(sel, source)
+        if offset:
+            samples = samples.withColumn(
+                "ts_us", F.col("ts_us") + F.lit(offset)
+            )
+    return _RangeArg(samples, rng, grid, offset, at is not None)
+
+
+def _replicate_steps(
+    out: DataFrame, arg: _RangeArg, params: PromParams
+) -> DataFrame:
+    """A result on ``arg``'s grid → on the query grid: a pinned
+    single-step result repeats at every query step (engine.go
+    evaluates the pinned matrix identically for every step)."""
+    if not arg.pinned:
+        return out
     from ..operators.stepfanout import step_spine
 
-    assert spark is not None, "@-pinned range vectors need the SparkSession"
-    spine = step_spine(spark, params.start_us, params.end_us, params.step_us)
+    spine = step_spine(
+        out.sparkSession, params.start_us, params.end_us, params.step_us
+    )
     return out.drop("step_us").crossJoin(spine)
+
+
+def _grouping_keys(grouping, labels: list[str]) -> list[str]:
+    """The ``labels`` an aggregation's ``by``/``without`` clause keeps
+    (none without a clause).  Sanitization-aware: by (http_method)
+    groups on a stored http.method column (dedup preserves
+    first-spelling order)."""
+    from ..functions.otel_labels import resolve_label_name
+
+    if grouping is None:
+        return []
+    if grouping.without:
+        dropped = {resolve_label_name(l, labels) or l for l in grouping.labels}
+        return [l for l in labels if l not in dropped]
+    return list(
+        dict.fromkeys(
+            r
+            for l in grouping.labels
+            for r in [resolve_label_name(l, labels)]
+            if r is not None
+        )
+    )
 
 
 def _is_scalar_expr(e) -> bool:
@@ -374,39 +450,19 @@ def _compile(expr, source: MetricSource, params: PromParams, spark) -> DataFrame
         return spine.withColumn("value", F.lit(expr.value))
 
     if isinstance(expr, ast.VectorSelector):
-        if expr.range_us is not None and expr.subquery_step_us is None:
+        if expr.range_us is not None:
             raise SyntaxError(
                 "PromQL: range vector must be consumed by a range function"
             )
-        return _instant_vector(expr, source, params)
+        return _instant_vector(expr, source, params, spark)
 
     if isinstance(expr, ast.FuncCall):
         return _compile_func(expr, source, params, spark)
 
     if isinstance(expr, ast.VectorAgg):
-        from ..functions.otel_labels import resolve_label_name
-
         inner = _compile(expr.expr, source, params, spark)
         labels = _labels_of(inner)
-        if expr.grouping and not expr.grouping.without:
-            # sanitization-aware: by (http_method) groups on a stored
-            # http.method column (dedup preserves first-spelling order)
-            by = list(
-                dict.fromkeys(
-                    r
-                    for l in expr.grouping.labels
-                    for r in [resolve_label_name(l, labels)]
-                    if r is not None
-                )
-            )
-        elif expr.grouping and expr.grouping.without:
-            dropped = {
-                resolve_label_name(l, labels) or l
-                for l in expr.grouping.labels
-            }
-            by = [l for l in labels if l not in dropped]
-        else:
-            by = []
+        by = _grouping_keys(expr.grouping, labels)
         if expr.op == "count_values":
             import re as _re
 
@@ -577,26 +633,12 @@ def _subquery_samples(
     )
 
 
-def _strip_subquery(sel: ast.VectorSelector) -> ast.VectorSelector:
-    from dataclasses import replace as _dc_replace
-
-    return _dc_replace(
-        sel, range_us=None, subquery_step_us=None, offset_us=0, at_us=None
-    )
-
-
 def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, spark):
     name = fc.name
 
     if name == "__subquery__":
-        return _subquery_samples(
-            fc.args[0],
-            fc.range_us,  # type: ignore[attr-defined]
-            getattr(fc, "step_us", None),
-            getattr(fc, "offset_us", 0),
-            source,
-            params,
-            spark,
+        raise SyntaxError(
+            "PromQL: range vector must be consumed by a range function"
         )
 
     if name == "absent":
@@ -618,38 +660,15 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         return out
 
     if name in RATE_FUNCS or name in ("resets", "changes", "deriv", "predict_linear"):
-        sel = fc.args[0]
-        # @ on a RANGE vector pins the window: evaluate once at the
-        # fixed time, then replicate across the step grid (engine.go
-        # evaluates the pinned matrix identically for every step)
-        at_pin = _resolve_at_pin(getattr(sel, "at_us", None), params)
-        eff = at_pin if at_pin is not None else params
-        if isinstance(sel, ast.FuncCall) and sel.name == "__subquery__":
-            # rate over a subquery: samples are the inner expression
-            # evaluated on the subquery grid
-            pts = _subquery_samples(
-                sel.args[0], sel.range_us, getattr(sel, "step_us", None),
-                getattr(sel, "offset_us", 0), source, eff, spark,
-            )
-            sel = ast.VectorSelector(
-                None, [], sel.range_us, getattr(sel, "offset_us", 0)
-            )
-        elif not isinstance(sel, ast.VectorSelector) or sel.range_us is None:
-            raise SyntaxError(f"PromQL: {name}() needs a range vector")
-        elif sel.subquery_step_us is not None:
-            pts = _subquery_samples(
-                _strip_subquery(sel), sel.range_us, sel.subquery_step_us,
-                sel.offset_us, source, eff, spark,
-            )
-        else:
-            pts = _selector_points(sel, source)
+        arg = _range_arg(fc.args[0], name, source, params, spark)
+        pts = arg.samples
         kw = dict(
-            series=_point_labels(pts),
+            series=arg.labels,
             value_col="sample",
-            start_us=eff.start_us,
-            end_us=eff.end_us,
-            step_us=eff.step_us,
-            range_us=sel.range_us,
+            start_us=arg.grid.start_us,
+            end_us=arg.grid.end_us,
+            step_us=arg.grid.step_us,
+            range_us=arg.range_us,
         )
         if name in ("resets", "changes"):
             from ..operators.rate import resets_changes
@@ -664,9 +683,9 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
 
             horizon_s = fc.args[1].value
             out = pl_op(
-                pts, horizon_s=horizon_s, offset_us=sel.offset_us, **kw
+                pts, horizon_s=horizon_s, offset_us=arg.offset_us, **kw
             )
-            if at_pin is not None:
+            if arg.pinned:
                 # UNLIKE every other range function, predict_linear is
                 # NOT constant under @: the regression window is
                 # pinned but the prediction target tracks each step's
@@ -680,89 +699,59 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
                     .drop("step_us")
                     .withColumnRenamed("value", "__slope")
                 )
-                out = out.drop("step_us").join(slope, kw["series"])
                 out = _replicate_steps(
-                    out.withColumn("step_us", F.lit(eff.start_us)),
-                    params,
-                    spark,
+                    out.join(slope, kw["series"]), arg, params
                 ).withColumn(
                     "value",
                     F.col("value")
                     + F.col("__slope")
-                    * (F.col("step_us") - F.lit(eff.start_us)) / F.lit(1e6),
+                    * (F.col("step_us") - F.lit(arg.grid.start_us)) / F.lit(1e6),
                 ).drop("__slope")
-            return out
+                return out
         else:
             out = rate_family(pts, name, **kw)
-        if at_pin is not None:
-            out = _replicate_steps(out, params, spark)
-        return out
+        return _replicate_steps(out, arg, params)
 
     if name in RANGE_FUNCS or name == "present_over_time":
-        arg = fc.args[-1]
+        sel = fc.args[-1]
         q = fc.args[0] if name == "quantile_over_time" else None
         if isinstance(q, ast.Literal):
             q = q.value
-        at_pin = _resolve_at_pin(getattr(arg, "at_us", None), params)
-        eff = at_pin if at_pin is not None else params
-        if isinstance(arg, ast.VectorSelector) and arg.range_us is not None:
-            if arg.subquery_step_us is not None:
-                # selector subquery x[r:st]: instant evals on the
-                # subquery grid, NOT raw samples
-                samples = _subquery_samples(
-                    _strip_subquery(arg), arg.range_us,
-                    arg.subquery_step_us, arg.offset_us, source, eff,
-                    spark,
-                )
-            else:
-                samples = _selector_points(arg, source)
-            rng = arg.range_us
-        elif isinstance(arg, ast.FuncCall) and arg.name == "__subquery__":
-            samples = _compile(arg, source, params, spark)
-            rng = arg.range_us  # type: ignore[attr-defined]
-        else:
-            raise SyntaxError(f"PromQL: {name}() needs a range vector")
+        arg = _range_arg(sel, name, source, params, spark)
+        grid = arg.grid
         if name == "present_over_time":
-            fanned = fanout(
-                samples, eff.start_us, eff.end_us, eff.step_us, rng
-            )
             out = (
-                fanned.select(*_point_labels(samples), "step_us")
+                arg.fanned()
+                .select(*arg.labels, "step_us")
                 .distinct()
                 .withColumn("value", F.lit(1.0))
             )
-            if at_pin is not None:
-                out = _replicate_steps(out, params, spark)
-            return out
+            return _replicate_steps(out, arg, params)
         out = range_aggregate(
-            samples,
-            RANGE_FUNCS[name],
-            start_us=eff.start_us,
-            end_us=eff.end_us,
-            step_us=eff.step_us,
-            range_us=rng,
-            by=_point_labels(samples),
+            arg.samples,
+            name,
+            start_us=grid.start_us,
+            end_us=grid.end_us,
+            step_us=grid.step_us,
+            range_us=arg.range_us,
+            by=arg.labels,
             q=q,
             spark=spark,
         )
-        if at_pin is not None:
-            out = _replicate_steps(out, params, spark)
-        if name.startswith("ts_of_"):
-            # the points/subquery frames shift sample ts by the
-            # selector offset for window math; the wire value is the
-            # RAW sample timestamp (engine.go keeps original point T
-            # and shifts only the window) — undo the shift here, like
-            # timestamp()
-            off = getattr(arg, "offset_us", 0) or 0
-            if off:
-                out = out.withColumn(
-                    "value", F.col("value") - F.lit(off / 1e6)
-                )
-        if name == "absent_over_time" and isinstance(arg, ast.VectorSelector):
+        out = _replicate_steps(out, arg, params)
+        if name.startswith("ts_of_") and arg.offset_us:
+            # the samples shift ts by the offset for window math; the
+            # wire value is the RAW sample timestamp (engine.go keeps
+            # original point T and shifts only the window) — undo the
+            # shift here, like timestamp()
+            out = out.withColumn(
+                "value", F.col("value") - F.lit(arg.offset_us / 1e6)
+            )
+        if name == "absent_over_time" and isinstance(sel, ast.VectorSelector):
             # result labels derive from the equality matchers
             # (functions.go createLabelsForAbsentFunction — same rule
             # the absent() branch applies)
-            for m in arg.matchers:
+            for m in sel.matchers:
                 if m.op == "=":
                     out = out.withColumn(m.name, F.lit(m.value))
         return out
@@ -865,27 +854,14 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         # lookback chose at each step (seconds, float)
         sel = fc.args[0]
         if isinstance(sel, ast.VectorSelector) and sel.range_us is None:
-            pts = _selector_points(sel, source)
-            at_pin = _resolve_at_pin(sel.at_us, params)
-            eff = at_pin if at_pin is not None else params
-            fanned = fanout(
-                pts,
-                eff.start_us,
-                eff.end_us,
-                eff.step_us,
-                params.lookback_us,
-            )
-            labels = _point_labels(pts)
-            # the wire value is the RAW sample timestamp — the points
-            # frame shifts ts by the selector offset for window math,
-            # so undo it here (funcTimestamp reads the unshifted T)
-            out = fanned.groupBy(*labels, "step_us").agg(
-                ((F.max("ts_us") - F.lit(sel.offset_us)) / F.lit(1e6))
+            arg = _range_arg(sel, name, source, params, spark, instant=True)
+            # the wire value is the RAW sample timestamp — undo the
+            # offset shift (funcTimestamp reads the unshifted T)
+            out = arg.fanned().groupBy(*arg.labels, "step_us").agg(
+                ((F.max("ts_us") - F.lit(arg.offset_us)) / F.lit(1e6))
                 .alias("value")
             )
-            if at_pin is not None:
-                out = _replicate_steps(out, params, spark)
-            return out
+            return _replicate_steps(out, arg, params)
         inner = _compile(sel, source, params, spark)
         return inner.withColumn(
             "value", (F.col("step_us") / F.lit(1e6)).cast("double")
@@ -970,23 +946,19 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         # percentile machinery as quantile_over_time, deviations
         # joined back on the (series, step) key — two keyed shuffles,
         # no all-pairs
-        sel = fc.args[0]
-        if not isinstance(sel, ast.VectorSelector) or sel.range_us is None:
-            raise SyntaxError("PromQL: mad_over_time() needs a range vector")
-        pts = _selector_points(sel, source)
-        fanned = fanout(
-            pts, params.start_us, params.end_us, params.step_us, sel.range_us
-        )
-        keys = [*_point_labels(pts), "step_us"]
+        arg = _range_arg(fc.args[0], name, source, params, spark)
+        fanned = arg.fanned()
+        keys = [*arg.labels, "step_us"]
         med = fanned.groupBy(*keys).agg(
             F.percentile("sample", F.lit(0.5)).alias("__med")
         )
         dev = fanned.join(med, keys).withColumn(
             "__dev", F.abs(F.col("sample") - F.col("__med"))
         )
-        return dev.groupBy(*keys).agg(
+        out = dev.groupBy(*keys).agg(
             F.percentile("__dev", F.lit(0.5)).alias("value")
         )
+        return _replicate_steps(out, arg, params)
 
     if name == "double_exponential_smoothing":
         # Holt-Winters double smoothing over each range window
@@ -996,17 +968,10 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         # Expressed as one aggregate() fold over the sorted window —
         # stays JVM-side, no UDF.
         sel, sf_a, tf_a = fc.args
-        if not isinstance(sel, ast.VectorSelector) or sel.range_us is None:
-            raise SyntaxError(
-                "PromQL: double_exponential_smoothing() needs a range vector"
-            )
         sf = F.lit(sf_a.value)
         tf = F.lit(tf_a.value)
-        pts = _selector_points(sel, source)
-        fanned = fanout(
-            pts, params.start_us, params.end_us, params.step_us, sel.range_us
-        )
-        g = fanned.groupBy(*_point_labels(pts), "step_us").agg(
+        arg = _range_arg(sel, name, source, params, spark)
+        g = arg.fanned().groupBy(*arg.labels, "step_us").agg(
             F.transform(
                 F.array_sort(
                     F.collect_list(F.struct(F.col("ts_us"), F.col("sample")))
@@ -1031,11 +996,12 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
             step,
             lambda acc: acc["s1"],
         )
-        return (
+        out = (
             g.filter(F.size(vals) >= 2)
             .withColumn("value", smoothed)
             .drop("__vals")
         )
+        return _replicate_steps(out, arg, params)
 
     if name == "label_join":
         import re as _re
@@ -1053,7 +1019,7 @@ def _compile_func(fc: ast.FuncCall, source: MetricSource, params: PromParams, sp
         name == "histogram_quantile"
         and _native_hist_sel(fc.args[-1], source) is not None
     ):
-        return _compile_hist_native(fc, source, params)
+        return _compile_hist_native(fc, source, params, spark)
 
     if name == "histogram_quantile":
         q = fc.args[0].value
@@ -1078,21 +1044,15 @@ def _native_hist_sel(arg, source: MetricSource):
     ``rate(sel[r])`` around one (a histogram rate — per-window
     histogram scaled by 1/range), or ``sum [by (...)]`` over either
     (bucket-wise histogram merge across series, Prometheus native-
-    histogram sum aggregation).  Returns (selector, is_rate,
-    group_labels) where group_labels is None when no aggregation
-    wraps; None when the shape is not a native-histogram expression."""
+    histogram sum aggregation).  Returns (selector, is_rate, grouping)
+    where grouping is None when no aggregation wraps (a bare ``sum``
+    groups by no label); None when the shape is not a
+    native-histogram expression."""
     if isinstance(arg, ast.VectorAgg) and arg.op == "sum":
         inner = _native_hist_sel(arg.expr, source)
         if inner is None or inner[2] is not None:
             return None
-        g = arg.grouping
-        if g is None:
-            labels: list[str] = []
-        elif g.without:
-            labels = [c for c in source.label_cols if c not in g.labels]
-        else:
-            labels = [c for c in source.label_cols if c in g.labels]
-        return inner[0], inner[1], labels
+        return inner[0], inner[1], arg.grouping or ast.Grouping([])
     if isinstance(arg, ast.VectorSelector) and (
         arg.name in source.histograms or arg.name in source.exp_states
     ):
@@ -1108,7 +1068,7 @@ def _native_hist_sel(arg, source: MetricSource):
 
 
 def _compile_hist_native(
-    fc: ast.FuncCall, source: MetricSource, params: PromParams
+    fc: ast.FuncCall, source: MetricSource, params: PromParams, spark
 ) -> DataFrame:
     """Native-histogram function family over an exp-histogram-typed
     selector — bare or rate()-wrapped (see operators/histogram.py
@@ -1131,54 +1091,88 @@ def _compile_hist_native(
         raise SyntaxError(
             f"PromQL: {name}() needs a native-histogram selector"
         )
-    sel, is_rate, group_labels = found
-    if not is_rate and sel.name in source.exp_states:
-        return _compile_hist_exp_state(fc, sel, group_labels, source, params)
-    if is_rate and sel.range_us is None:
-        raise SyntaxError("PromQL: rate() needs a range vector")
-    rng = sel.range_us or params.lookback_us
-    pts = _selector_points(sel, source)
-    fanned = fanout(
-        pts, params.start_us, params.end_us, params.step_us, rng
+    sel, is_rate, grouping = found
+    state = not is_rate and sel.name in source.exp_states
+    if state and grouping is not None:
+        raise SyntaxError(
+            "PromQL: sum() over exp-histogram STATE selectors is not "
+            "supported (merge states at ingest instead)"
+        )
+    arg = _range_arg(
+        sel,
+        "rate" if is_rate else name,
+        source,
+        params,
+        spark,
+        instant=not is_rate,
+        points=_exp_state_points if state else None,
     )
+    fanned = arg.fanned()
     # sum-aggregated histograms merge observation streams bucket-wise;
     # grouping by fewer keys IS that merge — no extra pass needed
-    label_keys = source.label_cols if group_labels is None else group_labels
+    label_keys = (
+        arg.labels if grouping is None else _grouping_keys(grouping, arg.labels)
+    )
     keys = [*label_keys, "step_us"]
+    if state:
+        return _replicate_steps(
+            _compile_hist_exp_state(fc, fanned, keys), arg, params
+        )
     if name in ("histogram_count", "histogram_sum", "histogram_avg"):
         col = {
             "histogram_count": "h_count",
             "histogram_sum": "h_sum",
             "histogram_avg": "h_avg",
         }[name]
-        out = hist_count_sum_avg(fanned, keys)
         value = F.col(col)
         if is_rate and name != "histogram_avg":  # avg is scale-free
-            value = value / F.lit(rng / 1e6)
-        return out.select(*keys, value.alias("value"))
-    b = bucket_counts(fanned, keys)
-    if name in ("histogram_stddev", "histogram_stdvar"):
+            value = value / F.lit(arg.range_us / 1e6)
+        out = hist_count_sum_avg(fanned, keys).select(
+            *keys, value.alias("value")
+        )
+    elif name in ("histogram_stddev", "histogram_stdvar"):
         col = "h_stddev" if name == "histogram_stddev" else "h_stdvar"
-        return hist_stdvar(b, keys, fanned).select(
+        out = hist_stdvar(bucket_counts(fanned, keys), keys, fanned).select(
             *keys, F.col(col).alias("value")
         )
-    if name == "histogram_fraction":
+    elif name == "histogram_fraction":
         lo, hi = fc.args[0].value, fc.args[1].value
-        return hist_fraction(b, keys, lo, hi).select(
+        out = hist_fraction(bucket_counts(fanned, keys), keys, lo, hi).select(
             *keys, F.col("h_fraction").alias("value")
         )
-    return hist_quantile(b, keys, fc.args[0].value)
+    else:
+        out = hist_quantile(bucket_counts(fanned, keys), keys, fc.args[0].value)
+    return _replicate_steps(out, arg, params)
+
+
+_EXP_STATE_FIELDS = (
+    "count",
+    "sum",
+    "scale",
+    "zero_count",
+    "positive_offset",
+    "positive_counts",
+)
+
+
+def _exp_state_points(sel: ast.VectorSelector, source: MetricSource) -> DataFrame:
+    """An exp-histogram STATE selector's samples: each stored state as
+    one struct ``sample``."""
+    df = filter_matchers(
+        source.exp_states[sel.name], sel.matchers, source.exp_state_labels
+    )
+    return df.select(
+        *source.exp_state_labels,
+        "ts_us",
+        F.struct(*_EXP_STATE_FIELDS).alias("sample"),
+    )
 
 
 def _compile_hist_exp_state(
-    fc: ast.FuncCall,
-    sel: ast.VectorSelector,
-    group_labels: "list[str] | None",
-    source: MetricSource,
-    params: PromParams,
+    fc: ast.FuncCall, fanned: DataFrame, keys: list[str]
 ) -> DataFrame:
     """histogram_* over an exponential-histogram STATE selector: pick
-    the latest stored state per (series, step) inside the lookback
+    the latest stored state per (series, step) inside the window
     (instant-selector staleness semantics) and decode the bucket
     arrays at THEIR OWN scale (querier_metrics.go:1365-1470 — real
     SDKs emit scale 3..8).  count/sum/avg read the exact stored
@@ -1187,52 +1181,17 @@ def _compile_hist_exp_state(
     promql/quantile.go (geometric-midpoint mass around the true
     mean)."""
     from ..operators.exp_histogram import (
-        exp_bound,
         exp_histogram_fraction,
         exp_histogram_quantile,
         explode_exp_buckets,
     )
-    from ..operators.stepfanout import fanout
 
-    if group_labels is not None:
-        raise SyntaxError(
-            "PromQL: sum() over exp-histogram STATE selectors is not "
-            "supported (merge states at ingest instead)"
-        )
     name = fc.name
-    df = filter_matchers(
-        source.exp_states[sel.name], sel.matchers, source.exp_state_labels
+    latest = (
+        fanned.groupBy(*keys)
+        .agg(F.max_by("sample", "ts_us").alias("s"))
+        .select(*keys, "s.*")
     )
-    ts = F.col("ts_us")
-    if sel.offset_us:
-        ts = ts + F.lit(sel.offset_us)
-    st = df.select(
-        *source.exp_state_labels,
-        ts.alias("ts_us"),
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        "positive_counts",
-    )
-    fanned = fanout(
-        st, params.start_us, params.end_us, params.step_us, params.lookback_us
-    )
-    keys = [*source.exp_state_labels, "step_us"]
-    latest = fanned.groupBy(*keys).agg(
-        F.max_by(
-            F.struct(
-                "count",
-                "sum",
-                "scale",
-                "zero_count",
-                "positive_offset",
-                "positive_counts",
-            ),
-            F.col("ts_us"),
-        ).alias("s")
-    ).select(*keys, "s.*")
     if name in ("histogram_count", "histogram_sum", "histogram_avg"):
         value = {
             "histogram_count": F.col("count").cast("double"),

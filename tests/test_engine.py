@@ -446,3 +446,21 @@ def test_tempo_search_root_service_name(spark):
         for t in eng.search("{ }", limit=10)["traces"]
     }
     assert got == {"GET /cart": "checkout", "GET /q": "search"}
+
+
+def test_prom_query_skips_null_samples(spark):
+    """A NULL sample is no point: selectors, aggregations and range
+    functions see only the rows that carry the metric."""
+    eng = _sparse_metrics(spark, "pod")
+
+    def series(q):
+        return eng.query_range(q, 0, 4_000_000, 1_000_000)["data"]["result"]
+
+    mem = series("mem")
+    assert sorted(s["metric"]["host"] for s in mem) == ["b", "c"]
+    assert all(v != "None" for s in mem for _, v in s["values"])
+    assert [float(v) for _, v in series("count(mem)")[0]["values"]] == [1, 2, 2]
+    assert sorted(s["metric"]["host"] for s in series("count_over_time(mem[1m])")) == [
+        "b",
+        "c",
+    ]

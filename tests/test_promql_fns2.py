@@ -330,3 +330,60 @@ def test_mad_and_smoothing_key_on_the_points_frame(spark):
         'double_exponential_smoothing({__name__=~"up|mem"}[10s], 0.5, 0.5)'
     )
     assert [r["__name__"] for r in des] == ["mem", "up"]
+
+
+def _window_source(spark, every_s=10):
+    """One series with a dotted label, sampled every ``every_s`` s over
+    [0, 600] s: a gauge ``g``, the counter ``c = t`` and the native
+    histogram observation stream ``h``."""
+    rows = [
+        ("p1", t * 1_000_000, float((t // 10) ** 2 % 17), float(t),
+         float(1 + (t // 10) * 7 % 13))
+        for t in range(0, 601, every_s)
+    ]
+    df = spark.createDataFrame(
+        rows, "`k8s.pod` string, ts_us long, g double, c double, h double"
+    )
+    return MetricSource(
+        df=df,
+        metrics={"g": "g", "c": "c", "h": "h"},
+        label_cols=["k8s.pod"],
+        histograms=frozenset({"h"}),
+    )
+
+
+_WINDOW_FNS = {
+    "max_over_time": "max_over_time({})",
+    "quantile_over_time": "quantile_over_time(0.5, {})",
+    "mad_over_time": "mad_over_time({})",
+    "double_exponential_smoothing": "double_exponential_smoothing({}, 0.5, 0.5)",
+    "histogram_sum": "histogram_sum({})",
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_WINDOW_FNS))
+def test_window_functions_resolve_at_and_subqueries_alike(spark, fn):
+    """Every window function resolves its argument the same way: an
+    @-pinned window gives the pinned value at every step, a selector
+    subquery is evaluated on its own grid, a subquery of an expression
+    is accepted, and a dotted label surfaces sanitized."""
+    src = _window_source(spark)
+    grid = PromParams(300_000_000, 600_000_000, 100_000_000)
+    steps = list(range(grid.start_us, grid.end_us + 1, grid.step_us))
+    metric = "h" if fn == "histogram_sum" else "g"
+
+    def values(q, source=src, params=grid):
+        out = compile_promql(_WINDOW_FNS[fn].format(q), source, params, spark)
+        rows = out.collect()
+        assert all(r["k8s_pod"] == "p1" for r in rows), q
+        return {r["step_us"]: r["value"] for r in rows}
+
+    at_200 = values(f"{metric}[100s]", params=PromParams(200_000_000, 200_000_000, 1))
+    pinned = values(f"{metric}[100s] @ 200")
+    assert pinned == {s: pytest.approx(at_200[200_000_000]) for s in steps}
+    # x[100s:50s] reads x at the 50 s multiples of each window: the same
+    # as a range over a source sampled only there
+    every_50s = values(f"{metric}[100s]", source=_window_source(spark, 50))
+    assert values(f"{metric}[100s:50s]") == pytest.approx(every_50s)
+    if fn != "histogram_sum":  # a histogram function needs a histogram
+        assert sorted(values("(rate(c[60s]))[100s:50s]")) == steps
